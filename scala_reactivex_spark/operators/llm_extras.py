@@ -42,10 +42,9 @@ Release / evaluation audits:
 - ``llm_cluster_purity``: external clustering validation (k-means
   assignment × embedding labels, majority share per cluster).
 
-These keys were held behind the round-7 window (registry
-_HOLD_NEXT_ROUND, cleared for round 8) and now lead the round-8 driver
-window as the only never-green keys; they were verified by the identical
-local protocol (scripts/verify_local.py) in round 7.
+These keys were held out of the round-7 driver window and led the
+round-8 window as the only never-green keys; they were verified by the
+identical local protocol (scripts/verify_local.py) in round 7.
 """
 
 from __future__ import annotations

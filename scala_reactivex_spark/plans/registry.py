@@ -137,35 +137,6 @@ _R345_GREEN = (
     "llm_domain_mix", "llm_winnowing",
 )
 
-#: Keys graded at their declared rows-only maximum (no oracle by design,
-#: reasons in each @register doc) — a window slot cannot improve their grade.
-#: Round 6: empty — rel_agg_approx (the last oracle-less entry) now pins its
-#: HLL estimate to a deterministic ±3% error-band boolean, so it is
-#: hash-gradeable and moves to the front of the window.
-_ROWS_ONLY_GRADED: tuple[str, ...] = ()
-
-#: Banked-green keys the last verdict asked to RE-CONFIRM in the next
-#: window's spare slots.  Empty for round 8: the r07 verdict's three
-#: re-confirms all banked in CORRECTNESS_r07.json, and the r08 plan is
-#: never-green-first + OLDEST banked greens in the spare slots (their
-#: grades are the most stale).
-_RECONFIRM_NEXT: tuple[str, ...] = ()
-
-#: Keys to HOLD out of this round's window (sorted LAST; used in r7 to
-#: keep the window exactly the 47 ungraded round-6 keys, re-used in r13
-#: for the three round-13 additions so the window stays the r8 cohort +
-#: oldest r9 greens per the r12 verdict #8).  Held keys are verified by
-#: the identical local protocol (scripts/verify_local.py) in their birth
-#: round and become the never-green front of the NEXT round's window
-#: automatically once this tuple is cleared.
-#:
-#: CLEARED for round 14 (r13 verdict #1): the three held data-selection
-#: keys (llm_reservoir_sample / llm_rho_select / llm_eval_affinity) now
-#: lead the window as never-driver-green keys so the driver banks them
-#: in CORRECTNESS_r14.json.  Steady-state policy: this tuple stays empty.
-_HOLD_NEXT_ROUND: tuple[str, ...] = ()
-
-
 def _externally_green() -> dict[str, int]:
     """name → latest round with an all-match CORRECTNESS_r{N}.json row.
 
@@ -206,17 +177,16 @@ def _grade_order(names):
     defining module changed after the latest driver grade with no local
     re-verification at the current source (plans/grade_fp.py, round-12
     verdict #7: stale greens must not hide behind window-size
-    construction); (3) explicit re-confirms; (4) banked greens, OLDEST
-    round first (an r08 grade is the most stale, so it re-confirms while
-    window slots remain — r07 verdict "Next round" #1).  Falls back to
-    the hardcoded round-1..5 tuples when no CORRECTNESS artifacts are
-    readable (e.g. a bare checkout)."""
+    construction); (3) banked greens, OLDEST round first (an r08 grade
+    is the most stale, so it re-confirms while window slots remain —
+    r07 verdict "Next round" #1).  Falls back to the hardcoded
+    round-1..5 tuples when no CORRECTNESS artifacts are readable (e.g. a
+    bare checkout)."""
     green = _externally_green()
     if green:
         from scala_reactivex_spark.plans import grade_fp
 
-        held = set(_HOLD_NEXT_ROUND)
-        front = [n for n in names if n not in green and n not in held]
+        front = [n for n in names if n not in green]
         # Rotation priority #2 (right behind never-green — round-12
         # verdict #7): keys whose DEFINING MODULE changed after their
         # latest driver grade and whose current source no local
@@ -228,28 +198,21 @@ def _grade_order(names):
                 n
                 for n in names
                 if n in green
-                and n not in held
                 and grade_fp.edited_unverified(
                     n, _REGISTRY[n].fn.__module__, green[n]
                 )
             ),
             key=lambda n: (green[n], n),
         )
-        reconfirm = [n for n in _RECONFIRM_NEXT if n in green and n in set(names)]
-        new_held = [n for n in names if n in held and n not in green]
-        rest = set(front) | set(edited) | set(reconfirm) | set(new_held)
+        rest = set(front) | set(edited)
         back = sorted(
             (n for n in names if n not in rest), key=lambda n: (green[n], n)
         )
-        # Held keys sort LAST: their birth-round coverage is the local
-        # verify log; they lead the next round's window as never-green
-        # once the hold is cleared.
-        return front + edited + reconfirm + back + new_held
+        return front + edited + back
     rank = {}
     for group, base in (
         (_R345_GREEN, 500_000),
         (_R2_GREEN, 1_000_000),
-        (_ROWS_ONLY_GRADED, 2_000_000),
         (_R1_GREEN_ROTATE_LAST, 3_000_000),
     ):
         for i, n in enumerate(group):

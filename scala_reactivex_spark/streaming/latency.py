@@ -181,10 +181,11 @@ def measure_serving_latency(
     reps: int = 3,
     only: set[str] | None = None,
 ) -> dict[str, dict]:
-    """{twin name: {batches, p50_trigger_ms, max_trigger_ms, cold_sec,
-    warm_drain_sec}} for the serving twins at ``sf_dir`` (five pinned +
-    the three round-14 additions — r14 verdict #2 — + the round-15
-    compaction router and quality-drift monitor, ten by default).
+    """{twin name: {batches, expected_batches, p50_trigger_ms,
+    max_trigger_ms, cold_sec, warm_drain_sec}} for the serving twins at
+    ``sf_dir`` (five pinned + the three round-14 additions — r14
+    verdict #2 — + the round-15 compaction router and quality-drift
+    monitor, ten by default).
 
     ``only`` restricts to a twin-name subset — the warm-arbitration
     probe (scripts/twin_warm_probe.py) re-measures a single flagged twin
@@ -420,6 +421,10 @@ def measure_serving_latency(
             n_batches = max(n_batches, len(tap.trigger_ms))
         out[name] = {
             "batches": n_batches,
+            # A settle that timed out short of the part-file count (e.g.
+            # an empty part file that never yields a batch) shows here
+            # as batches < expected_batches.
+            "expected_batches": expected,
             "p50_trigger_ms": (
                 int(statistics.median(warm_trigger))
                 if warm_trigger

@@ -3,7 +3,7 @@ tail window REGARDLESS of data widths (round-12 verdict #1: the old
 72-query map made line length data-dependent and BENCH_r12.json recorded
 rc=1/parsed:null when more floats tipped over 1.0 s).
 
-These tests exercise bench.build_contract_line directly — no Spark — with
+These tests exercise bench.report directly — no Spark — with
 worst-case numeric widths and maximal-length query names, so a structural
 addition that could re-overflow the window fails in pytest, not in the
 driver's once-per-round bench run.
@@ -12,15 +12,32 @@ driver's once-per-round bench run.
 from __future__ import annotations
 
 import json
+from unittest import mock
 
 import bench
 
 
-def _line(sf_val=0.1, *, name_len=64, seconds=8_640_000.999):
-    # 72 headline names at an implausible 64 chars each, every timing at
-    # a 100-days-in-seconds width — far beyond anything a real pass can
-    # produce (the slowest real query is ~3 s at sf0.1).
-    times = {f"q{i:03d}".ljust(name_len, "x"): seconds for i in range(72)}
+def _line(
+    sf_val=0.1,
+    *,
+    cold_pass=(99_999, 0),
+    name_len=64,
+    seconds=8_640_000.999,
+):
+    # Every query name at an implausible 64 chars and every timing at a
+    # 100-days-in-seconds width — far beyond anything a real pass can
+    # produce (the slowest real query is ~3 s at sf0.1).  report() reads
+    # the bucket of each name from bench.QUERIES, so the synthetic names
+    # get a synthetic table with the real bucket names.
+    sizes = {"headline": 72, "extras": 130, "archive": 22}
+    table = {
+        f"{b}{i:03d}".ljust(name_len, "x"): (b, 1.0)
+        for b in ("headline", *bench.TIERS)
+        for i in range(sizes.get(b, 50))
+    }
+    times = dict.fromkeys(table, seconds)
+    headline = {n: seconds for n, (b, _) in table.items() if b == "headline"}
+    tiered = {n: seconds for n in times if n not in headline}
     # All ELEVEN measured twins (not just the pinned five), at worst-case
     # width, so the new per-twin p50 map is bounded under the real twin
     # count.
@@ -29,45 +46,36 @@ def _line(sf_val=0.1, *, name_len=64, seconds=8_640_000.999):
     twin_latency = {
         k: {"p50_trigger_ms": 8_640_000_000.9} for k in DEFAULT_TWINS
     }
-    return bench.build_contract_line(
-        times=times,
-        untiered=set(times),
-        total=seconds * 72,
-        extras=seconds * 130,
-        archive_sec=seconds * 22,
-        beyond_sec=seconds * 50,
-        beyond_pin=bench.BEYOND_NEWEST_BASELINE_SEC["readback"],
-        growth_sec=seconds * 50,
-        growth_pin=bench.GROWTH_BASELINE_SEC["readback"],
-        frontier_sec=seconds * 50,
-        frontier_pin=bench.FRONTIER_BASELINE_SEC["readback"],
-        horizon_sec=seconds * 50,
-        horizon_pin=bench.HORIZON_BASELINE_SEC["readback"],
-        summit_sec=seconds * 50,
-        sf_val=sf_val,
-        warm={f"w{i:03d}".ljust(name_len, "x"): seconds for i in range(20)},
-        warm_headline=seconds * 72 if sf_val == 0.1 else None,
-        warm_ratios={
-            k: (8_640_000.999 if sf_val == 0.1 else None)
-            for k in (
-                "extras_warm",
-                "archive_warm",
-                "beyond_warm",
-                "growth_warm",
-                "frontier_warm",
-                "horizon_warm",
-            )
+    raw = {
+        "queries": times,
+        "warm_medians": {
+            f"w{i:03d}".ljust(name_len, "x"): seconds for i in range(20)
         },
-        twin_latency=twin_latency,
-        prepopulated=99_999,
-        cold_cache={"hits": 99_999, "misses": 99_999},
-    )
+        "warm_reps": 3,
+        "warm_arb": headline if sf_val == 0.1 else {},
+        "tier_warm_arb": tiered if sf_val == 0.1 else {},
+        "twin_latency": twin_latency,
+        "disk_cache": {
+            "root": "/",
+            "prepopulated_indexes": 99_999,
+            "cold_pass": {
+                "hits": cold_pass[0],
+                "misses": cold_pass[1],
+                "session_hits": 0,
+            },
+        },
+        "sf": sf_val,
+    }
+    with mock.patch.object(bench, "QUERIES", table):
+        return bench.report(raw)[1]
 
 
 def test_contract_line_bounded_under_worst_case_widths():
-    line = _line()
-    assert len(line) < 1800, len(line)
-    assert "\n" not in line
+    # readback, fresh and mixed cold-pass stamps
+    for cold_pass in ((99_999, 0), (0, 99_999), (99_999, 99_999)):
+        line = _line(cold_pass=cold_pass)
+        assert len(line) < 1800, len(line)
+        assert "\n" not in line
 
 
 def test_contract_line_parses_and_carries_every_pin_ratio():
@@ -143,68 +151,49 @@ def test_contract_line_non_sf01_omits_scale_specific_ratios():
 
 
 def test_frozen_suites_are_closed_sets():
-    assert len(bench.BEYOND_BASELINE) == 130
-    assert len(bench.BEYOND_EXTRAS) == 12
-    assert len(bench.BEYOND_NEW) == 5
-    assert len(bench.BEYOND_NEWER) == 5
-    assert (
-        len(bench.BEYOND_EXTRAS | bench.BEYOND_NEW | bench.BEYOND_NEWER)
-        == 22
-    )
-    assert len(bench.BEYOND_NEWEST) == 10
-    assert len(bench.GROWTH) == 7
-    assert len(bench.FRONTIER) == 8
-    assert len(bench.HORIZON) == 7
+    sizes = {b: len(refs) for b, refs in bench.SUITES.items()}
+    assert sizes == {
+        "headline": 72,
+        "extras": 130,
+        "archive": 22,
+        "beyond": 10,
+        "growth": 7,
+        "frontier": 8,
+        "horizon": 7,
+        "summit": 0,
+        "exclude": 8,
+    }
+    # No query sits in two buckets (the flat view would hide it) ...
+    assert len(bench.QUERIES) == sum(sizes.values())
+    # ... and the table covers exactly the registry (bench.main refuses
+    # to time a drifted table).
+    from scala_reactivex_spark.plans.registry import registry
+
+    assert set(bench.QUERIES) == set(registry())
     # Regime-specific pins — both regimes must be present.
-    assert set(bench.BEYOND_NEWEST_BASELINE_SEC) == {"fresh", "readback"}
-    assert set(bench.GROWTH_BASELINE_SEC) == {"fresh", "readback"}
-    assert set(bench.FRONTIER_BASELINE_SEC) == {"fresh", "readback"}
-    assert set(bench.HORIZON_BASELINE_SEC) == {"fresh", "readback"}
+    for bucket, pins in bench.PINS.items():
+        assert set(pins) == {"fresh", "readback"}, bucket
+    assert set(bench.PINS) == set(bench.TIERS) - {"summit"}
     # The archive pin is the exact sum of its three retired components.
-    assert bench.ARCHIVE_BASELINE_SEC == (
-        bench.NEW_BASELINE_SEC
-        + bench.NEWER_BASELINE_SEC
-        + bench.NEWEST_BASELINE_SEC
-    )
+    assert bench.PINS["archive"]["readback"] == 14.9 + 4.77 + 2.33
+    assert bench.PINS["archive"]["fresh"] == 14.9 + 4.77 + 2.33
 
 
 def test_warm_headline_reference_covers_exactly_the_frozen_72():
     """The arbitration anchor must cover the headline suite exactly:
     a missing entry would silently skip arbitration for that query, an
     extra entry would arbitrate a tiered query into the wrong total."""
-    assert len(bench.WARM_HEADLINE_REF) == 72
-    tiered = (
-        bench.BEYOND_BASELINE
-        | bench.BEYOND_EXTRAS
-        | bench.BEYOND_NEW
-        | bench.BEYOND_NEWER
-        | bench.BEYOND_NEWEST
-        | bench.GROWTH
-        | bench.FRONTIER
-        | bench.HORIZON
-        | bench.SUMMIT
-        | bench.EXCLUDE
-    )
-    assert not set(bench.WARM_HEADLINE_REF) & tiered
-    assert all(v > 0 for v in bench.WARM_HEADLINE_REF.values())
+    refs = {n: r for n, (b, r) in bench.QUERIES.items() if b == "headline"}
+    assert len(refs) == 72
+    assert all(v > 0 for v in refs.values())
 
 
 def test_tiered_warm_reference_covers_exactly_the_tiered_suites():
     """The bucket arbitration anchor must cover the timed tiered suites
-    exactly (every bucket member, nothing from the headline 72 or the
-    untimed EXCLUDE family); future SUMMIT keys fall back to their cold
-    time until the reference is extended at pin time."""
-    tiered = (
-        bench.BEYOND_BASELINE
-        | bench.BEYOND_EXTRAS
-        | bench.BEYOND_NEW
-        | bench.BEYOND_NEWER
-        | bench.BEYOND_NEWEST
-        | bench.GROWTH
-        | bench.FRONTIER
-        | bench.HORIZON
-    )
-    assert set(bench.TIERED_WARM_REF) == tiered
-    assert not set(bench.TIERED_WARM_REF) & set(bench.WARM_HEADLINE_REF)
-    assert not set(bench.TIERED_WARM_REF) & bench.EXCLUDE
-    assert all(v > 0 for v in bench.TIERED_WARM_REF.values())
+    exactly (every bucket member, nothing from the untimed EXCLUDE
+    family)."""
+    for name, (bucket, ref) in bench.QUERIES.items():
+        if bucket == "exclude":
+            assert ref is None, name
+        else:
+            assert ref > 0, name

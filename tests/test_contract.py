@@ -69,17 +69,12 @@ def test_every_query_documented_in_coverage():
 
 def test_grade_order_never_green_first():
     """The rotation is self-maintaining: keys without an external
-    hash-green CORRECTNESS row lead (minus any explicitly held keys),
-    then EDITED-SINCE-GRADE keys without a local re-verification
-    (round-13 policy, plans/grade_fp.py), then the verdict-requested
-    re-confirm keys, then banked keys OLDEST-green-round first, with
-    held new keys LAST (they cover their birth round via the local
-    verify log and lead the next round's window once the hold clears);
-    the order is deterministic."""
+    hash-green CORRECTNESS row lead, then EDITED-SINCE-GRADE keys
+    without a local re-verification (round-13 policy,
+    plans/grade_fp.py), then banked keys OLDEST-green-round first; the
+    order is deterministic."""
     from scala_reactivex_spark.plans import grade_fp
     from scala_reactivex_spark.plans.registry import (
-        _HOLD_NEXT_ROUND,
-        _RECONFIRM_NEXT,
         _REGISTRY,
         _externally_green,
         registry,
@@ -88,35 +83,25 @@ def test_grade_order_never_green_first():
     order = list(registry())
     green = _externally_green()
     assert green, "driver artifacts present in this repo"
-    held = set(_HOLD_NEXT_ROUND)
-    front = [k for k in order if k not in green and k not in held]
+    front = [k for k in order if k not in green]
     edited = sorted(
         (
             k
             for k in order
             if k in green
-            and k not in held
             and grade_fp.edited_unverified(
                 k, _REGISTRY[k].fn.__module__, green[k]
             )
         ),
         key=lambda k: (green[k], k),
     )
-    reconfirm = [k for k in _RECONFIRM_NEXT if k in green and k in order]
-    new_held = [k for k in order if k in held and k not in green]
-    n_lead = len(front) + len(edited) + len(reconfirm)
+    n_lead = len(front) + len(edited)
     assert order[: len(front)] == front, "never-green keys lead"
     assert (
-        order[len(front) : len(front) + len(edited)] == edited
+        order[len(front) : n_lead] == edited
     ), "edited-since-grade keys follow the never-green front"
-    assert (
-        order[len(front) + len(edited) : n_lead] == reconfirm
-    ), "re-confirm keys fill the spare window slots"
-    if new_held:
-        assert order[-len(new_held) :] == new_held, "held keys sort last"
     prev_round = None
-    banked = order[n_lead:] if not new_held else order[n_lead : -len(new_held)]
-    for k in banked:
+    for k in order[n_lead:]:
         assert k in green, f"ungraded {k} sorted among banked keys"
         r = green[k]
         assert prev_round is None or r >= prev_round
