@@ -416,16 +416,10 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Finished indexes already under the disk-memo root: a "cold" pass
-    # over them measures parquet read-back, not the build.
+    # Finished indexes of this fixture already under the disk-memo root:
+    # a "cold" pass over them measures parquet read-back, not the build.
     cache_root = memo._default_cache_root()
-    prepopulated = 0
-    if os.path.isdir(cache_root):
-        prepopulated = sum(
-            1
-            for d in os.listdir(cache_root)
-            if os.path.exists(os.path.join(cache_root, d, "_COMPLETE"))
-        )
+    prepopulated = memo.finished_indexes(sf_dir)
 
     def _time(name: str) -> float:
         t0 = time.perf_counter()

@@ -304,6 +304,7 @@ def _bloom_fpr_oracle() -> str:
     pos_list = ", ".join(
         f"((({a} * h) + {b}) % {P31}) % {BLOOM_M}" for a, b in seeds
     )
+    cols = ",\n       ".join(_bloom_fpr_cols("//"))
     return f"""
 WITH split AS (
   SELECT doc_id,
@@ -337,21 +338,36 @@ WITH split AS (
          (SELECT CAST(count(*) AS BIGINT) FROM neg) AS n_neg,
          (SELECT CAST(count(*) AS BIGINT) FROM fp) AS n_fp
 )
-SELECT n_set,
-       CAST(n_set * 1000000 // {BLOOM_M} AS BIGINT) AS load_1e6,
-       n_neg, n_fp,
-       CAST(n_fp * 1000000 // n_neg AS BIGINT) AS fpr_meas_1e6,
-       CAST(floor(pow(CAST(n_set AS DOUBLE) / {BLOOM_M}, {BLOOM_K})
-                  * 1000000 + 0.5) AS BIGINT) AS fpr_theory_1e6,
-       CAST(n_fp * 1000000 // n_neg
-              <= 2 * CAST(floor(pow(CAST(n_set AS DOUBLE) / {BLOOM_M},
-                                    {BLOOM_K}) * 1000000 + 0.5) AS BIGINT)
-            AND 2 * (n_fp * 1000000 // n_neg)
-              >= CAST(floor(pow(CAST(n_set AS DOUBLE) / {BLOOM_M},
-                                {BLOOM_K}) * 1000000 + 0.5) AS BIGINT)
-            AS INT) AS within_2x
+SELECT {cols}
 FROM c
 """
+
+
+def _bloom_fpr_cols(div: str) -> tuple[str, ...]:
+    """The audit's output columns over ``c(n_set, n_neg, n_fp)``, with
+    ``div`` the engine's integer division (Spark ``DIV``, DuckDB
+    ``//``), so both engines project the same expressions.  With no
+    negative gram (``n_neg = 0``) the measured rate and the 2x flag are
+    NULL in both; unguarded, Spark's ``DIV`` raises DIVIDE_BY_ZERO under
+    ANSI mode (Spark 4's default) while DuckDB's ``//`` gives NULL."""
+    from scala_reactivex_spark.operators.llm_pipeline import BLOOM_K, BLOOM_M
+
+    theory = (
+        f"CAST(floor(pow(CAST(n_set AS DOUBLE) / {BLOOM_M}, {BLOOM_K})"
+        " * 1000000 + 0.5) AS BIGINT)"
+    )
+    meas = f"(n_fp * 1000000 {div} n_neg)"
+    return (
+        "n_set",
+        f"CAST(n_set * 1000000 {div} {BLOOM_M} AS BIGINT) AS load_1e6",
+        "n_neg",
+        "n_fp",
+        f"CASE WHEN n_neg = 0 THEN NULL ELSE CAST({meas} AS BIGINT) END"
+        " AS fpr_meas_1e6",
+        f"{theory} AS fpr_theory_1e6",
+        f"CASE WHEN n_neg = 0 THEN NULL ELSE CAST({meas} <= 2 * {theory}"
+        f" AND 2 * {meas} >= {theory} AS INT) END AS within_2x",
+    )
 
 
 @register(
@@ -377,7 +393,6 @@ FROM c
 def llm_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scala_reactivex_spark.operators.llm_pipeline import (
         BLOOM_K,
-        BLOOM_M,
         _bloom_pos_cols,
         _decon_shingles_hashed,
         decon_bloom_positions,
@@ -429,26 +444,7 @@ def llm_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_fp"),
         )
     )
-    theory = (
-        f"CAST(floor(pow(CAST(n_set AS DOUBLE) / {BLOOM_M}, {BLOOM_K})"
-        " * 1000000 + 0.5) AS BIGINT)"
-    )
-    return c.select(
-        "n_set",
-        F.expr(f"CAST(n_set * 1000000 DIV {BLOOM_M} AS BIGINT)").alias(
-            "load_1e6"
-        ),
-        "n_neg",
-        "n_fp",
-        F.expr("CAST(n_fp * 1000000 DIV n_neg AS BIGINT)").alias(
-            "fpr_meas_1e6"
-        ),
-        F.expr(theory).alias("fpr_theory_1e6"),
-        F.expr(
-            f"CAST(n_fp * 1000000 DIV n_neg <= 2 * {theory}"
-            f" AND 2 * (n_fp * 1000000 DIV n_neg) >= {theory} AS INT)"
-        ).alias("within_2x"),
-    )
+    return c.selectExpr(*_bloom_fpr_cols("DIV"))
 
 
 #: Funnel quality cut: docs must band at or above this PSI decile

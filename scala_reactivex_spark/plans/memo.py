@@ -26,6 +26,7 @@ serving stale persisted frames (round-8 ADVICE).
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import threading
@@ -104,6 +105,33 @@ def _default_cache_root() -> str:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     return os.path.join(repo, "spark-warehouse", "index_cache")
+
+
+#: Segments after ``{name}@{fixture dir basename}`` in the on-disk name
+#: of one index generation: ``-{fp8}-{tag8}``, legacy (pre-round-12)
+#: ``-{fp8}``; fp8 is 8-hex, tag8 8-hex or the literal 'nosrc000'.
+_GEN_SUFFIX = r"-[0-9a-f]{8}(-([0-9a-f]{8}|nosrc000))?"
+
+
+def finished_indexes(sf_dir: str) -> int:
+    """How many finished disk-memo indexes the cache root holds for
+    this fixture directory — those scoped ``@<basename(sf_dir)>-``,
+    not other fixtures' (a dashed basename like ``fx-a`` is told apart
+    from ``fx`` by the segment shape, as the prune does)."""
+    root = _default_cache_root()
+    if not os.path.isdir(root):
+        return 0
+    gen = re.compile(
+        r"[^@]+@"
+        + re.escape(os.path.basename(os.path.abspath(sf_dir)))
+        + _GEN_SUFFIX
+    )
+    return sum(
+        1
+        for d in os.listdir(root)
+        if gen.fullmatch(d)
+        and os.path.exists(os.path.join(root, d, "_COMPLETE"))
+    )
 
 
 #: Per-process disk-tier observability: how many disk_memo lookups were
@@ -202,7 +230,18 @@ def disk_memo(
     reason (e.g. bm25_contrib hash-partitioned by doc_id so scoring
     aggregates shuffle-free) pass the SAME layout here so read-back
     sessions see the layout the building session had; value-identity is
-    untouched (repartitioning never changes rows)."""
+    untouched (repartitioning never changes rows).
+
+    Marker format: the ``_COMPLETE`` file's first line is the builder's
+    container shape and part count (``tuple:N``, ``list:N`` or
+    ``scalar:1``), so a ``(df,)`` builder round-trips as a 1-tuple and a
+    list as a list.  It is followed by one line per part holding that
+    part's schema JSON as a parquet read infers it (every field, array
+    element and map value nullable).  Read-back passes that schema to
+    ``spark.read.schema(...)``, which skips the schema-inference job a
+    bare ``spark.read.parquet`` launches per part; the data is still
+    read from disk, persisted and counted.  A marker without schema
+    lines (written before they existed) still loads, by inference."""
     root = _default_cache_root()
     scoped = f"{name}@{os.path.basename(os.path.abspath(sf_dir))}"
     base = os.path.join(
@@ -213,16 +252,21 @@ def disk_memo(
     def load_or_build() -> T:
         marker = os.path.join(base, "_COMPLETE")
         if os.path.exists(marker):
+            from pyspark.sql.types import StructType
+
             DISK_MEMO_STATS["hits"] += 1
-            # Marker records the builder's CONTAINER SHAPE ("tuple:N",
-            # "list:N", "scalar:1") so a (df,) builder round-trips as a
-            # 1-tuple and a list as a list across sessions, identical
-            # to what the building session returned (round-10 ADVICE).
-            shape, _, n_str = open(marker).read().partition(":")
+            with open(marker) as f:
+                head, *schemas = f.read().splitlines()
+            shape, _, n_str = head.partition(":")
             n = int(n_str)
             frames = []
             for i in range(n):
-                df = spark.read.parquet(os.path.join(base, f"part{i}"))
+                reader = spark.read
+                if len(schemas) == n:
+                    reader = reader.schema(
+                        StructType.fromJson(json.loads(schemas[i]))
+                    )
+                df = reader.parquet(os.path.join(base, f"part{i}"))
                 if load_layout is not None:
                     df = load_layout(i, df)
                 df = df.persist()
@@ -251,6 +295,9 @@ def disk_memo(
                 )
             with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
                 f.write(f"{shape}:{len(items)}")
+                for df in items:
+                    schema = _as_read(df.schema.jsonValue())
+                    f.write("\n" + json.dumps(schema))
             if not os.path.exists(base):
                 try:
                     os.rename(tmp, base)
@@ -275,10 +322,7 @@ def disk_memo(
                     # 'idx@fx-a-<fp8>' belonging to fixture 'fx-a'
                     # (round-12 ADVICE) — the shape test can't, because
                     # 'a' is not an 8-hex segment.
-                    gen = re.compile(
-                        re.escape(scoped)
-                        + r"-[0-9a-f]{8}(-([0-9a-f]{8}|nosrc000))?"
-                    )
+                    gen = re.compile(re.escape(scoped) + _GEN_SUFFIX)
                     for d in os.listdir(root):
                         full = os.path.join(root, d)
                         if (
@@ -301,6 +345,22 @@ def disk_memo(
     if not ran["load_or_build"]:
         DISK_MEMO_STATS["session_hits"] += 1
     return val
+
+
+def _as_read(schema_json):
+    """A schema's JSON as a parquet read of its written data infers it:
+    Spark writes parquet with every field, array element and map value
+    nullable."""
+    if isinstance(schema_json, dict):
+        return {
+            k: True
+            if k in ("nullable", "containsNull", "valueContainsNull")
+            else _as_read(v)
+            for k, v in schema_json.items()
+        }
+    if isinstance(schema_json, list):
+        return [_as_read(v) for v in schema_json]
+    return schema_json
 
 
 def materialize_scalar(spark, df):
@@ -339,7 +399,12 @@ def _unpersist_quietly(obj) -> None:
 def clear_session_memo() -> None:
     """Drop all memoized entries, unpersisting any cached DataFrames so
     executor storage is released (tests that restart sessions; long
-    sessions that want the memory back)."""
+    sessions that want the memory back).
+
+    The catalog's per-session relation cache (``sources.catalog.table``)
+    is left alone: its entries are unpersisted scan plans that pin no
+    executor storage, so dropping them would release nothing and only
+    bring back one schema-inference job per table on the next query."""
     with _LOCK:
         for v in _CACHE.values():
             _unpersist_quietly(v)

@@ -77,14 +77,23 @@ class _ProgressTap(StreamingQueryListener):
 
 
 def _n_source_files(src_dir: str | None) -> int:
-    """Number of parquet part files in a probe-source directory — the
-    exact micro-batch count a maxFilesPerTrigger=1 availableNow drain
-    of that directory runs (one non-empty batch per part file)."""
+    """Number of non-empty parquet part files in a probe-source
+    directory — the exact count of non-empty micro-batches a
+    maxFilesPerTrigger=1 availableNow drain of that directory runs.  A
+    part file whose footer says 0 rows yields no batch the tap counts,
+    so counting it would make the settle wait out its whole deadline."""
+    import pyarrow.parquet as pq
+
     if not src_dir or not os.path.isdir(src_dir):
         return 1
     return max(
         1,
-        sum(1 for f in os.listdir(src_dir) if f.endswith(".parquet")),
+        sum(
+            1
+            for f in os.listdir(src_dir)
+            if f.endswith(".parquet")
+            and pq.read_metadata(os.path.join(src_dir, f)).num_rows > 0
+        ),
     )
 
 

@@ -197,3 +197,30 @@ def test_tiered_warm_reference_covers_exactly_the_tiered_suites():
             assert ref is None, name
         else:
             assert ref > 0, name
+
+
+def test_prepopulated_indexes_count_only_this_fixture(tmp_path, monkeypatch):
+    """The stamp's ``prepopulated_indexes`` counts finished indexes of
+    the benchmarked fixture only: another fixture's indexes (including
+    one whose basename extends this one with a dash) and unfinished
+    ones do not make a build pass look like a read-back."""
+    from scala_reactivex_spark.plans import memo
+
+    root = tmp_path / "index_cache"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_CACHE", str(root))
+    for d, done in (
+        ("ivf@sf0.1-0123abcd-89abcdef", True),
+        ("minhash@sf0.1-0123abcd-nosrc000", True),
+        ("pq@sf0.1-0123abcd", True),  # legacy name, no builder tag
+        ("kmeans@sf0.1-0123abcd-89abcdef", False),  # no _COMPLETE yet
+        ("ivf@sf0.01-0123abcd-89abcdef", True),
+        ("minhash@sf0.01-0123abcd-89abcdef", True),
+        ("ivf@sf0.1-a-0123abcd-89abcdef", True),  # fixture 'sf0.1-a'
+    ):
+        (root / d).mkdir(parents=True)
+        if done:
+            (root / d / "_COMPLETE").write_text("tuple:1")
+    assert memo.finished_indexes(str(tmp_path / "x" / "sf0.1")) == 3
+    assert memo.finished_indexes(str(tmp_path / "sf0.01") + "/") == 2
+    assert memo.finished_indexes(str(tmp_path / "sf0.1-a")) == 1
+    assert memo.finished_indexes(str(tmp_path / "sf1")) == 0

@@ -1,22 +1,120 @@
-"""widen_scan / _est_scan_partitions (round 18 — r17 ADVICE: the
-widening trigger is now a file-metadata estimate, not a planning pass).
+"""Catalog layer: the per-session relation cache of ``table()`` and
+widen_scan / _est_scan_partitions (round 18 — r17 ADVICE: the widening
+trigger is now a file-metadata estimate, not a planning pass).
 
-The estimate must reproduce the old ``df.rdd.getNumPartitions()``
-probe's DECISION (widen iff the scan is narrower than the session's
-parallelism) on the fixture tables, and fail safe (no widening) when
-file sizes are unavailable.
+The relation cache must serve one frame per (session, table, file
+state) and re-read a rewritten table.  The estimate must reproduce the
+old ``df.rdd.getNumPartitions()`` probe's DECISION (widen iff the scan
+is narrower than the session's parallelism) on the fixture tables, and
+fail safe (no widening) when file sizes are unavailable.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from scala_reactivex_spark.sources.catalog import (
     _est_scan_partitions,
     _size_conf_bytes,
+    _stat_signature,
     table,
     widen_scan,
 )
+
+#: The JVM-plan keys of the benchmark's ``batch`` workload.
+BATCH_JVM_KEYS = (
+    "src_scan_events",
+    "op_scan_running_sum",
+    "op_window_tumbling",
+    "op_combine_latest",
+    "rel_q1_pricing",
+)
+
+
+def _fixture_copy(sf_dir, tmp_path):
+    """A private copy of the region table (the fixture dir is
+    read-only) that a test may touch and rewrite."""
+    fix = tmp_path / "catfix"
+    fix.mkdir()
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), fix)
+    return str(fix), fix / "region.parquet"
+
+
+def test_table_reuses_relation_while_file_unchanged(spark, sf_dir, tmp_path):
+    fix, _ = _fixture_copy(sf_dir, tmp_path)
+    a = table(spark, fix, "region")
+    assert table(spark, fix, "region") is a
+    assert a.count() == pq.read_metadata(f"{fix}/region.parquet").num_rows
+
+
+def test_table_rereads_touched_or_rewritten_file(spark, sf_dir, tmp_path):
+    """A new mtime (even within the same second) or a rewrite gives a
+    fresh relation, and the stale entry is replaced, not kept."""
+    fix, f = _fixture_copy(sf_dir, tmp_path)
+    path = os.path.abspath(str(f))
+    a = table(spark, fix, "region")
+
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    b = table(spark, fix, "region")
+    assert b is not a
+    assert spark._catalog_relations[path][1] is b
+
+    pq.write_table(pq.read_table(f).slice(0, 2), f)
+    c = table(spark, fix, "region")
+    assert c is not b and c.count() == 2
+    assert spark._catalog_relations[path][1] is c
+    assert table(spark, fix, "region") is c
+
+
+def test_table_relations_are_per_session(spark, sf_dir, tmp_path):
+    """A session sharing the application (newSession) gets its own
+    relation, bound to itself."""
+    fix, _ = _fixture_copy(sf_dir, tmp_path)
+    other = spark.newSession()
+    mine = table(spark, fix, "region")
+    theirs = table(other, fix, "region")
+    assert theirs is not mine
+    assert theirs.sparkSession is other and mine.sparkSession is spark
+    assert table(other, fix, "region") is theirs
+
+
+def test_stat_signature_of_file_dir_and_remote(tmp_path):
+    f = tmp_path / "t.parquet"
+    f.write_bytes(b"abc")
+    st = os.stat(f)
+    assert _stat_signature(str(f)) == (3, st.st_mtime_ns)
+    d = tmp_path / "d.parquet"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x")
+    sig = _stat_signature(str(d))
+    os.utime(d / "part-0.parquet", ns=(0, 1))
+    assert _stat_signature(str(d)) != sig
+    assert _stat_signature("s3a://bucket/t.parquet") is None
+
+
+def test_warm_plan_build_launches_no_spark_job(spark, sf_dir):
+    """Building the batch workload's JVM keys a second time in a warm
+    session runs no Spark job: every table is already resolved, so no
+    per-call schema-inference job is left on the query path."""
+    from scala_reactivex_spark.plans.registry import registry
+
+    reg = registry()
+    sc = spark.sparkContext
+    for k in BATCH_JVM_KEYS:
+        reg[k].fn(spark, sf_dir)
+    gid = "warm-plan-build"
+    sc.setJobGroup(gid, gid)
+    try:
+        for k in BATCH_JVM_KEYS:
+            reg[k].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(gid) == []
 
 
 def test_size_conf_parsing(spark):

@@ -73,3 +73,29 @@ def test_ignore_elements_propagates_upstream_error(spark):
     # Rx ignoreElements still surfaces onError: upstream must EXECUTE.
     with pytest.raises(Exception, match="boom"):
         ignore_elements(throw(spark, "boom")).count()
+
+
+def test_bloom_fpr_audit_empty_negative_universe(spark):
+    """``llm_bloom_fpr_audit`` with no negative gram (``n_neg = 0``):
+    the measured rate and the 2x flag are NULL in Spark and in the
+    DuckDB oracle alike (unguarded, Spark's ANSI-mode DIV raised
+    DIVIDE_BY_ZERO while DuckDB's // gave NULL), and a non-degenerate
+    row still agrees."""
+    import duckdb
+
+    from scala_reactivex_spark.operators.llm_curation import _bloom_fpr_cols
+
+    cases = [(40, 0, 0), (40, 1000, 3)]
+    c = spark.createDataFrame(cases, "n_set bigint, n_neg bigint, n_fp bigint")
+    got = [tuple(r) for r in c.selectExpr(*_bloom_fpr_cols("DIV")).collect()]
+    values = ", ".join(f"({s}, {n}, {f})" for s, n, f in cases)
+    oracle = duckdb.sql(
+        f"WITH c(n_set, n_neg, n_fp) AS (VALUES {values}) SELECT "
+        + ", ".join(_bloom_fpr_cols("//"))
+        + " FROM c"
+    ).fetchall()
+    assert sorted(got) == sorted(oracle)
+    empty = next(r for r in got if r[2] == 0)
+    assert empty[4] is None and empty[6] is None
+    full = next(r for r in got if r[2] == 1000)
+    assert full[4] == 3000 and full[6] is not None

@@ -444,3 +444,92 @@ def test_disk_memo_stats_count_hits_and_misses(
         k: memo.DISK_MEMO_STATS[k] - before[k] for k in before
     }
     assert delta == {"misses": 1, "session_hits": 1, "hits": 1}
+
+
+def _jobs_before_persist(spark, fx, name, builder):
+    """Read ``name`` back from the disk tier and return, per part, how
+    many Spark jobs the read-back had launched by the time the part was
+    laid out: after its parquet read, before its persist + count.  The
+    counts are cumulative, so only the first part's count is the cost
+    of one read alone."""
+    from scala_reactivex_spark.plans.memo import clear_session_memo, disk_memo
+
+    sc = spark.sparkContext
+    seen: list[int] = []
+
+    def layout(i, df):
+        seen.append(len(sc.statusTracker().getJobIdsForGroup(gid)))
+        return df
+
+    clear_session_memo()
+    gid = f"readback-{name}"
+    sc.setJobGroup(gid, gid)
+    try:
+        back = disk_memo(spark, str(fx), name, builder, load_layout=layout)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return back, seen
+
+
+def test_disk_memo_read_back_infers_no_schema(spark, tmp_path, monkeypatch):
+    """The marker stores each part's schema as a parquet read infers
+    it, so read-back launches no schema-inference job before the
+    persist, and the read-back frames have the inferred schema."""
+    import pyspark.sql.functions as F
+
+    from scala_reactivex_spark.plans.memo import disk_memo
+
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_CACHE", str(cache))
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    (fx / "m.parquet").write_text("x")
+
+    def build():
+        base = spark.range(6)
+        return (
+            base.select(
+                F.col("id").alias("v"),
+                F.array(F.col("id").cast("double")).alias("vec"),
+                F.struct(F.lit(1).alias("a")).alias("st"),
+            ),
+            base.select(F.col("id").cast("decimal(38,6)").alias("d")),
+        )
+
+    disk_memo(spark, str(fx), "schema_probe", build)
+    (idx,) = [d for d in cache.iterdir() if d.name.startswith("schema_probe@")]
+    lines = (idx / "_COMPLETE").read_text().splitlines()
+    assert lines[0] == "tuple:2" and len(lines) == 3
+
+    back, seen = _jobs_before_persist(spark, fx, "schema_probe", build)
+    assert len(seen) == 2 and seen[0] == 0
+    for i, df in enumerate(back):
+        inferred = spark.read.parquet(str(idx / f"part{i}")).schema
+        assert df.schema == inferred
+    assert sorted(r.v for r in back[0].collect()) == list(range(6))
+
+
+def test_disk_memo_legacy_marker_still_loads(spark, tmp_path, monkeypatch):
+    """A marker with only the shape line (written before schema lines
+    existed) still round-trips, through schema inference."""
+    import pyspark.sql.functions as F
+
+    from scala_reactivex_spark.plans.memo import disk_memo
+
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_CACHE", str(cache))
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    (fx / "m.parquet").write_text("x")
+
+    def build():
+        return [spark.range(3).select(F.col("id").alias("v"))]
+
+    disk_memo(spark, str(fx), "legacy_probe", build)
+    (idx,) = [d for d in cache.iterdir() if d.name.startswith("legacy_probe@")]
+    (idx / "_COMPLETE").write_text("list:1")
+
+    back, seen = _jobs_before_persist(spark, fx, "legacy_probe", build)
+    assert isinstance(back, list) and len(back) == 1
+    assert sorted(r.v for r in back[0].collect()) == [0, 1, 2]
+    assert seen[0] >= 1  # the inference job that schema lines remove
