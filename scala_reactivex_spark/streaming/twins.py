@@ -34,6 +34,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scala_reactivex_spark.functions.determinism import dsum
 from scala_reactivex_spark.session import configure_session
+from scala_reactivex_spark.streaming.sinks import (
+    idempotent_parquet_sink,
+    run_foreach_batch,
+    serving_stream_conf,
+)
 
 DEBOUNCE_NS = 2 * 3_600 * 1_000_000_000
 
@@ -590,43 +595,6 @@ def twin_pack_sequences(sdf: DataFrame) -> DataFrame:
 # --- runner (the 'subscribe' terminal) ---
 
 
-import contextlib  # noqa: E402
-
-
-@contextlib.contextmanager
-def serving_shuffle_conf(spark):
-    """Scope ``spark.sql.shuffle.partitions`` down to the serving-twin
-    state-partition count around a stream ``.start()`` (round 18 — r17
-    verdict #2).
-
-    A streaming stateful operator freezes its state-partition count from
-    this conf at FIRST checkpoint creation; the session default (32,
-    sized for the batch suite's corpus-wide shuffles) gave every
-    10-group serving aggregate 32 state stores, and the per-trigger
-    commit of 32 near-empty stores was the twins' dominant fixed cost
-    (~0.8-1.0 s/trigger, r16/r17 verdicts).  Serving micro-batches are
-    small by construction (a probe tranche per trigger), so both the
-    state stores and the per-trigger shuffles size down together.
-
-    Env-parameterized, never hard-coded to the local core count:
-    ``SPARK_GRAFT_STATE_PARTITIONS`` (default 8 locally) — production
-    sizes this to key cardinality x arrival throughput and documents it
-    at deployment, exactly like ``SPARK_GRAFT_SHUFFLE`` for batch.  The
-    conf applies to NEW checkpoints only: a query restored from an
-    existing checkpoint reads its own frozen count from the offsets
-    metadata (Spark refuses to re-key), so replays and crash-restart
-    tests are untouched.  The conf is restored immediately after
-    ``start()`` returns — the query captured its snapshot by then — so
-    concurrently planned BATCH queries keep the session default."""
-    n = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def run_stream_to_table(
     stream_df: DataFrame,
     name: str,
@@ -642,7 +610,7 @@ def run_stream_to_table(
     Durable sinks (parquet/foreachBatch with idempotent writes) get
     exactly-once resume from the same checkpoint — that's the production
     path; this runner is the test/debug terminal."""
-    with serving_shuffle_conf(stream_df.sparkSession):
+    with serving_stream_conf(stream_df.sparkSession):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -2024,9 +1992,6 @@ def twin_hybrid_rrf(
     probe set (asserted in tests/test_retrieval_subdoc.py).  Returns the
     committed results as a batch frame."""
     from scala_reactivex_spark.operators.llm_retrieval import rrf_fuse
-    from scala_reactivex_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
 
     spark = sdf.sparkSession
     commit = idempotent_parquet_sink(out_dir)
@@ -2049,14 +2014,7 @@ def twin_hybrid_rrf(
         ).join(enc, "probe_id")
         commit(rrf_fuse(probes, corpus), batch_id)
 
-    with serving_shuffle_conf(sdf.sparkSession):
-        query = (
-            sdf.writeStream.foreachBatch(fuse_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
+    run_foreach_batch(sdf, fuse_batch, checkpoint_dir)
     return spark.read.parquet(out_dir).select(
         "probe_id", "rnk", "doc_id", "r_lex", "r_sem", "rrf_1e6"
     )
@@ -2181,9 +2139,6 @@ def twin_ann_ivf(
         cosine_with_norms,
         norm_col,
     )
-    from scala_reactivex_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
     from pyspark.sql import Window
 
     ev, cent, assignment = _ivf_index(spark, sf_dir)
@@ -2229,14 +2184,7 @@ def twin_ann_ivf(
             batch_id,
         )
 
-    with serving_shuffle_conf(sdf.sparkSession):
-        query = (
-            sdf.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
+    run_foreach_batch(sdf, score_batch, checkpoint_dir)
     return spark.read.parquet(out_dir).select(
         "probe_id", "neighbor_id", "cos_sim", "rnk"
     )
@@ -2272,9 +2220,6 @@ def twin_ann_pq(
         PQ_SUBDIM,
         TOPK,
         _pq_serving_pack,
-    )
-    from scala_reactivex_spark.streaming.sinks import (
-        idempotent_parquet_sink,
     )
 
     c1p, encp = _pq_serving_pack(spark, sf_dir)
@@ -2353,14 +2298,7 @@ def twin_ann_pq(
             batch_id,
         )
 
-    with serving_shuffle_conf(sdf.sparkSession):
-        query = (
-            sdf.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
+    run_foreach_batch(sdf, score_batch, checkpoint_dir)
     return spark.read.parquet(out_dir).select(
         "probe_id", "neighbor_id", "adc_d2", "rnk"
     )
@@ -2851,9 +2789,6 @@ def twin_ann_spann(
         cosine_with_norms,
         norm_col,
     )
-    from scala_reactivex_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
     from pyspark.sql import Window
 
     ev, cent, _ = _ivf_index(spark, sf_dir)
@@ -2900,14 +2835,7 @@ def twin_ann_spann(
             batch_id,
         )
 
-    with serving_shuffle_conf(sdf.sparkSession):
-        query = (
-            sdf.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
+    run_foreach_batch(sdf, score_batch, checkpoint_dir)
     return spark.read.parquet(out_dir).select(
         "probe_id", "neighbor_id", "cos_sim", "rnk"
     )
@@ -3074,9 +3002,6 @@ def twin_novelty_gate(
         novelty_over,
     )
     from scala_reactivex_spark.sources.catalog import table
-    from scala_reactivex_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
 
     # Session-memoized (one build + one persisted copy per session) —
     # a bare persist() per invocation would leak one pinned cached
@@ -3100,14 +3025,7 @@ def twin_novelty_gate(
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         commit(novelty_over(doc_grams(batch_df), cnt), batch_id)
 
-    with serving_shuffle_conf(sdf.sparkSession):
-        query = (
-            sdf.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
+    run_foreach_batch(sdf, score_batch, checkpoint_dir)
     return spark.read.parquet(out_dir).select(
         "doc_id", "n_grams", "n_novel", "novelty_1e4"
     )

@@ -8,13 +8,15 @@ result — the strongest form of the reference's hot/cold equivalence.
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from scala_reactivex_spark.operators import stateful, windows
-from scala_reactivex_spark.streaming import twins
+from scala_reactivex_spark.streaming import sinks, twins
 
 
 @pytest.fixture(scope="module")
@@ -108,13 +110,204 @@ def test_twin_debounce_subset_of_batch(spark, sf_dir, stream_src, ckpt):
     assert out.count() == batch.count() - n_users
 
 
-def test_twin_interval_join_smoke(spark, stream_src, ckpt):
-    sdf = twins.events_stream(spark, stream_src)
-    out = twins.run_stream_to_table(
-        twins.twin_interval_join(sdf), "t_join", ckpt
+#: Tranches the interval-join tests drain, one per trigger.
+JOIN_TRANCHES = 4
+
+
+@pytest.fixture(scope="module")
+def join_tranches(sf_dir, tmp_path_factory):
+    """The sf0.001 events cut into time-ordered parquet tranches with
+    rising mtimes (the file source drains them in mtime order, one per
+    trigger), so join state must carry across triggers."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    events = events.take(
+        pc.sort_indices(events, [("ts", "ascending"), ("event_id", "ascending")])
     )
-    assert out.count() > 0
+    out = tmp_path_factory.mktemp("join_tranches")
+    bounds = np.linspace(0, events.num_rows, JOIN_TRANCHES + 1).astype(int)
+    t0 = time.time() - 3_600
+    paths = []
+    for i in range(JOIN_TRANCHES):
+        path = str(out / f"tranche-{i}.parquet")
+        pq.write_table(events.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
+        os.utime(path, (t0 + 10 * i, t0 + 10 * i))
+        paths.append(path)
+    return paths
+
+
+def _deliver(paths, src) -> str:
+    """Copy tranches into the stream source ``src``, keeping their mtimes."""
+    os.makedirs(src, exist_ok=True)
+    for path in paths:
+        shutil.copy2(path, src)
+    return str(src)
+
+
+def _batch_pairs(sf_dir) -> list[tuple]:
+    """The batch interval join's (p_user, p_event_id, c_event_id) rows, in
+    DuckDB: perfbench's pair SQL over the whole fixture."""
+    import duckdb
+
+    events = f"read_parquet('{sf_dir}/events.parquet')"
+    return sorted(
+        duckdb.sql(
+            f"SELECT p.user_id, p.event_id, c.event_id FROM {events} p "
+            f"JOIN {events} c ON p.user_id = c.user_id "
+            "AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts "
+            "WHERE p.event_type = 'purchase' AND c.event_type = 'click'"
+        ).fetchall()
+    )
+
+
+def _pairs(df) -> list[tuple]:
+    return sorted(
+        tuple(r) for r in df.select("p_user", "p_event_id", "c_event_id").collect()
+    )
+
+
+def _join_stores(progress) -> list[tuple[int, int, bool]]:
+    """(numStateStoreInstances, numShufflePartitions, RocksDB metrics
+    present) of the join operator, per progress event that ran a batch."""
+    return [
+        (
+            op.numStateStoreInstances,
+            op.numShufflePartitions,
+            any(k.startswith("rocksdb") for k in op.customMetrics),
+        )
+        for p in progress
+        if p.numInputRows
+        for op in p.stateOperators
+    ]
+
+
+@pytest.fixture(scope="module")
+def join_drain(spark, join_tranches, tmp_path_factory):
+    """One serving drain of the interval-join twin over all tranches:
+    its result table and every progress event of the query."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    progress, ended = [], set()
+
+    class _Log(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == "t_join":
+                progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.add(str(event.id))
+
+    log = _Log()
+    spark.streams.addListener(log)
+    try:
+        src = _deliver(join_tranches, tmp_path_factory.mktemp("join_src"))
+        out = twins.run_stream_to_table(
+            twins.twin_interval_join(twins.events_stream(spark, src)),
+            "t_join",
+            str(tmp_path_factory.mktemp("join_ckpt")),
+        )
+        # Progress events arrive asynchronously; the termination event
+        # comes after the query's last progress event.
+        deadline = time.monotonic() + 30
+        while not ended and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(log)
+    return out, progress
+
+
+def test_twin_interval_join_equals_batch(sf_dir, join_drain):
+    """Drained over time-ordered tranches, the interval-join twin emits
+    exactly the batch interval join's pairs: none lost across triggers,
+    none twice."""
+    out, progress = join_drain
+    assert sum(1 for p in progress if p.numInputRows) == JOIN_TRANCHES
     assert set(out.columns) == {"p_user", "p_event_id", "c_event_id"}
+    want = _batch_pairs(sf_dir)
+    assert want, "fixture must produce interval-join pairs"
+    assert _pairs(out) == want
+
+
+def test_twin_interval_join_keeps_one_store_per_partition(
+    spark, join_drain, join_tranches, tmp_path
+):
+    """Under the serving conf a fresh join checkpoint runs on RocksDB
+    with join state format 3: one state store per partition, where the
+    HDFS-backed format 2 opened four.  Both runners, the memory-table
+    one and the durable sink, start under it."""
+    _, progress = join_drain
+    durable = sinks.run_with_idempotent_sink(
+        twins.twin_interval_join(
+            twins.events_stream(spark, _deliver(join_tranches, tmp_path / "src"))
+        ),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    n = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+    for events in (progress, durable.recentProgress):
+        assert _join_stores(events) == [(n, n, True)] * JOIN_TRANCHES
+
+
+def test_legacy_join_checkpoint_restarts_under_serving_conf(
+    spark, sf_dir, join_tranches, tmp_path
+):
+    """A join checkpoint made without the serving conf (HDFS-backed store,
+    join format 2, as a user-owned stream or an older checkpoint has)
+    restarts under it with its frozen provider, format and partition
+    count, and the restored state still finds every pair."""
+    src = _deliver(join_tranches[:2], tmp_path / "src")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    sdf = twins.twin_interval_join(twins.events_stream(spark, src))
+    legacy = (
+        sdf.writeStream.foreachBatch(sinks.idempotent_parquet_sink(out))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    legacy.awaitTermination()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _join_stores(legacy.recentProgress) == [(4 * n, n, False)] * 2
+
+    _deliver(join_tranches[2:], src)
+    restarted = sinks.run_with_idempotent_sink(
+        twins.twin_interval_join(twins.events_stream(spark, src)), out, ckpt
+    )
+    assert _join_stores(restarted.recentProgress) == [(4 * n, n, False)] * 2
+    assert _pairs(spark.read.parquet(out)) == _batch_pairs(sf_dir)
+
+
+def test_serving_stream_conf_restores_the_session_conf(spark):
+    """The serving confs hold only inside the block: an unset conf is
+    unset again after it, a caller's own value comes back unchanged, and
+    both hold when the block raises."""
+    join_fmt = "spark.sql.streaming.join.stateFormatVersion"
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    unset = [k for k in sinks.SERVING_STREAM_CONFS if k != join_fmt]
+    assert all(spark.conf.get(k, None) is None for k in unset)
+    spark.conf.set(join_fmt, "2")
+    try:
+        with pytest.raises(RuntimeError):
+            with sinks.serving_stream_conf(spark):
+                for key, value in sinks.SERVING_STREAM_CONFS.items():
+                    assert spark.conf.get(key) == value
+                assert spark.conf.get("spark.sql.shuffle.partitions") == (
+                    os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
+                )
+                raise RuntimeError("start failed")
+        assert all(spark.conf.get(k, None) is None for k in unset)
+        assert spark.conf.get(join_fmt) == "2"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    finally:
+        spark.conf.unset(join_fmt)
 
 
 def _has_protobuf() -> bool:
