@@ -8,7 +8,8 @@ committed sidecar (``grade_fingerprints.json``, next to this file) maps
 each registry key to
 
 - ``round``      — the round of its latest all-match driver grade,
-- ``graded_fp``  — 8-hex hash of the key's DEFINING MODULE at the commit
+- ``graded_fp``  — 8-hex hash of the key's DEFINING MODULE's code
+  (``source_fp``: docstrings and comments do not count) at the commit
   the driver graded that round (git archaeology:
   ``scripts/update_grade_fingerprints.py``),
 - ``verified_fp`` — module hash at the last time ``scripts/
@@ -34,6 +35,7 @@ lands in pytest and verify_local.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import importlib.util
 import json
@@ -59,12 +61,28 @@ def module_path(module_name: str) -> str | None:
     return spec.origin if spec and spec.origin else None
 
 
+def source_fp(text: str | bytes) -> str:
+    """8-hex md5 of a module's code: its AST without module, class and
+    function docstrings.  Comments and line positions are not in the
+    dump, so a docs-only edit keeps the fingerprint; any code edit
+    changes it.  The dump format follows the running Python's ``ast``,
+    so stamps compare only within one interpreter version."""
+    tree = ast.parse(text)
+    for node in ast.walk(tree):
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        ) and ast.get_docstring(node, clean=False) is not None:
+            node.body = node.body[1:] or [ast.Pass()]
+    return hashlib.md5(ast.dump(tree).encode()).hexdigest()[:8]
+
+
 def file_fp(path: str) -> str | None:
-    """8-hex md5 of a file's bytes (None if unreadable)."""
+    """``source_fp`` of a file (None if unreadable or unparsable)."""
     try:
         with open(path, "rb") as f:
-            return hashlib.md5(f.read()).hexdigest()[:8]
-    except OSError:
+            return source_fp(f.read())
+    except (OSError, SyntaxError, ValueError):
         return None
 
 

@@ -29,8 +29,11 @@ a corpus a SQL-only user can run end-to-end:
      corpus at 220/220 registry keys (the round-9
      additions land in DIALECT_REWRITE_KEYS).
 
-``tests/test_sql_corpus.py`` asserts every corpus entry equals its
-DataFrame implementation (order-insensitive, null-safe, dtype-equal).
+``tests/test_sql_corpus.py::test_sql_corpus_entry_equals_dataframe_impl``
+holds every corpus entry to its key's DataFrame result at sf0.001 (the
+same run ``tests/test_contract.py::test_query_runs`` checks against
+DuckDB): same column names, same dtypes, same order-insensitive value
+hash (``scripts/verify_local.table_hash``).
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ import re
 #: Registry keys whose DuckDB oracle text is ANSI-portable: verified to
 #: parse in Spark SQL and produce order-insensitive hash-identical
 #: results vs the DataFrame implementation (round-8 discovery sweep at
-#: sf0.01; re-asserted per-run by tests/test_sql_corpus.py at sf0.001).
+#: sf0.01; re-asserted per run by tests/test_sql_corpus.py at sf0.001).
 PORTABLE_ORACLE_KEYS: tuple[str, ...] = (
     "llm_dedup_exact",
     "llm_doc_sample",

@@ -625,73 +625,6 @@ def run_stream_to_table(
     return stream_df.sparkSession.table(name)
 
 
-# --- transformWithState twin (Spark 4 arbitrary-state API) ---
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class RunningStatsProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor: per-user running count + sum —
-    the scan/reduce pair on the MODERN state API (typed ValueState instead
-    of the applyInPandasWithState tuple blob). Emits one summary row per
-    key per micro-batch, i.e. the 'update' view of the fold."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        schema = StructType(
-            [
-                StructField("n", LongType()),
-                StructField("total", DoubleType()),
-            ]
-        )
-        self._state = handle.getValueState("stats", schema)
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total = self._state.get() if self._state.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 3)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def twin_running_stats_tws(sdf: DataFrame) -> DataFrame:
-    """Streaming twin of op_reduce on transformWithStateInPandas.
-
-    Environment note: the transformWithState protocol needs
-    ``google.protobuf`` on the Python workers (its state server speaks
-    protobuf). Where that's unavailable (this container), the
-    applyInPandasWithState twins above provide the same semantics; this
-    path is the production API on a standard cluster image.
-    """
-    return sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStatsProcessor(),
-        outputStructType="user_id BIGINT, n_events BIGINT, "
-        "total_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def _cdc_fn(
     key: tuple[Any, ...],
     batches: Iterator[pd.DataFrame],

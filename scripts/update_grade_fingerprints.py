@@ -5,10 +5,11 @@ For every registry key, finds its latest all-match round N across
 CORRECTNESS_r*.json, locates the commit that ADDED that artifact (the
 driver commits artifacts on top of the exact tree it graded, so the
 artifact commit's source files ARE the graded source), and records the
-8-hex hash of the key's defining module at that commit.  Existing
-``verified_fp`` stamps (written by scripts/verify_local.py) are
-preserved unless the graded fingerprint already covers the current
-source (then the stamp is redundant and dropped).
+code fingerprint (``grade_fp.source_fp``) of the key's defining module
+at that commit.  Existing ``verified_fp`` stamps (written by
+scripts/verify_local.py) are preserved unless the graded fingerprint
+already covers the current source (then the stamp is redundant and
+dropped).
 
 Run once per session start (and after a driver grade lands) so the
 registry's edit-aware rotation (plans/grade_fp.py) sees fresh data.
@@ -16,7 +17,6 @@ registry's edit-aware rotation (plans/grade_fp.py) sees fresh data.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import subprocess
@@ -84,10 +84,10 @@ def main() -> int:
                     check=True,
                     capture_output=True,
                 ).stdout
-                blob_cache[key] = hashlib.md5(raw).hexdigest()[:8]
-            except subprocess.CalledProcessError:
-                # Module did not exist at that commit (key moved files
-                # since) — no graded fingerprint is reconstructible.
+                blob_cache[key] = grade_fp.source_fp(raw)
+            except (subprocess.CalledProcessError, SyntaxError, ValueError):
+                # Module did not exist (or did not parse) at that commit
+                # — no graded fingerprint is reconstructible.
                 blob_cache[key] = None
         return blob_cache[key]
 

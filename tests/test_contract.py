@@ -1,4 +1,5 @@
-"""Driver-contract smoke: entry() works, every registered query runs."""
+"""Driver contract: entry() works, and every registered query matches its
+DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -24,35 +25,13 @@ def test_oracle_keys_subset_of_queries():
 
 
 @pytest.mark.parametrize("name", sorted(registry()))
-def test_query_runs(spark, sf_dir, name):
-    spec = registry()[name]
-    df = spec.fn(spark, sf_dir)
-    assert df.columns, name
-    assert df.count() >= 0
-
-
-def test_verify_gate_row_cap(spark):
-    """The local gate's collect is bounded: a result over the cap raises
-    (legible failure) instead of materializing on the driver, and a
-    result under the cap passes through unchanged."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "verify_local",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-            "verify_local.py",
-        ),
-    )
-    vl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vl)
-    small = spark.range(10)
-    assert len(vl.collect_capped(small, cap=100)) == 10
-    big = spark.range(1000)
-    with pytest.raises(OverflowError):
-        vl.collect_capped(big, cap=100)
+def test_query_runs(key_result, name):
+    """The per-key correctness gate: the DataFrame implementation
+    hash-matches its DuckDB oracle (verify_local.check).  Its SQL-corpus
+    entry is held to the same rows by
+    tests/test_sql_corpus.py::test_sql_corpus_entry_equals_dataframe_impl."""
+    problems = key_result(name).problems
+    assert not problems, "\n".join(problems)
 
 
 def test_every_query_documented_in_coverage():

@@ -69,6 +69,30 @@ def test_local_verification_clears_the_flag(sidecar):
     assert data["k"]["verified_fp"] == grade_fp.current_module_fp(MOD)
 
 
+def test_fingerprint_ignores_docs_but_not_code():
+    """A docstring or comment edit keeps a module's fingerprint, so it
+    cannot reorder the grading window; a code edit changes it."""
+    src = (
+        '"""Module doc."""\n'
+        "class C:\n"
+        '    """Class doc."""\n'
+        "    def f(self, x):\n"
+        '        """Function doc."""\n'
+        "        return x + 1  # comment\n"
+    )
+    fp = grade_fp.source_fp(src)
+    docs = (
+        src.replace("Module doc.", "Reworded module doc.")
+        .replace("Class doc.", "")
+        .replace('        """Function doc."""\n', "")
+        .replace("# comment", "# another comment\n        # and one more")
+    )
+    assert grade_fp.source_fp(docs) == fp
+    assert grade_fp.source_fp(docs.encode()) == fp
+    assert grade_fp.source_fp(src.replace("x + 1", "x + 2")) != fp
+    assert grade_fp.source_fp(src.replace("C:", "D:")) != fp
+
+
 def test_grade_order_front_loads_edited_keys(monkeypatch):
     """Window order: never-green first, then edited-unverified (oldest
     grade first), then banked greens oldest-first."""

@@ -1,47 +1,44 @@
 """Raw-SQL corpus law: every entry equals its DataFrame implementation.
 
 For each {name: sql} in ``sql_corpus()``, running the SQL through
-``spark.sql`` over the registered fixture views must produce the exact
-row multiset (order-insensitive, null-safe, same column names) as the
-registry's DataFrame implementation — the guarantee that makes the SQL
-surface a first-class way to drive the engine, not a parallel
-reimplementation that can drift.
+``spark.sql`` over the registered fixture views must give the same column
+names, dtypes and ``verify_local.table_hash`` as the registry's DataFrame
+implementation, whose rows the session's ``key_result`` fixture collects
+once per key (the same run ``tests/test_contract.py::test_query_runs``
+holds to the DuckDB oracle).
 """
 
 from __future__ import annotations
 
 import pytest
+import verify_local
 
 from scala_reactivex_spark.plans.registry import registry
 from scala_reactivex_spark.plans.sql_corpus import (
+    PORTABLE_ORACLE_KEYS,
     SPARK_SQL_OVERRIDES,
     run_sql,
     sql_corpus,
 )
 
 
-def _digest(df):
-    cols = sorted(df.columns)
-    return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-
-
 @pytest.mark.parametrize("name", sorted(sql_corpus()))
-def test_sql_corpus_entry_equals_dataframe_impl(spark, sf_dir, name):
+def test_sql_corpus_entry_equals_dataframe_impl(spark, sf_dir, key_result, name):
+    want = key_result(name)
     got = run_sql(spark, sf_dir, name)
-    want = registry()[name].fn(spark, sf_dir)
     assert sorted(got.columns) == sorted(want.columns)
-    # Column TYPES must agree too (order-insensitive): the value digest
-    # compares str(cell) per cell, which would let BIGINT 1 vs STRING '1'
-    # drift pass undetected (round-8 ADVICE).
+    # Column TYPES must agree too: the value hash compares str(cell), so
+    # BIGINT 1 vs STRING '1' drift would otherwise pass.
     assert sorted(got.dtypes) == sorted(want.dtypes)
-    assert _digest(got) == _digest(want)
+    assert (
+        verify_local.table_hash(got.columns, verify_local.collect_capped(got))
+        == want.value_hash
+    )
 
 
 def test_overrides_do_not_shadow_portable_oracles():
     """An override for a key whose oracle already runs in Spark would be
     dead text that can silently drift — keep the two sets disjoint."""
-    from scala_reactivex_spark.plans.sql_corpus import PORTABLE_ORACLE_KEYS
-
     assert not set(SPARK_SQL_OVERRIDES) & set(PORTABLE_ORACLE_KEYS)
 
 
@@ -53,12 +50,3 @@ def test_corpus_covers_every_registry_key():
     missing = set(registry()) - set(sql_corpus())
     assert not missing, f"registry keys missing from SQL corpus: {missing}"
 
-
-def test_corpus_covers_full_relational_substrate():
-    """EVERY §2.9 relational key (all 22 TPC-H shapes included) is
-    runnable as raw SQL — the substrate a SQL-only user reaches first."""
-    names = set(sql_corpus())
-    missing = {
-        k for k in registry() if k.startswith("rel_") and k not in names
-    }
-    assert not missing, f"relational keys missing from SQL corpus: {missing}"

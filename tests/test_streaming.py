@@ -310,44 +310,6 @@ def test_serving_stream_conf_restores_the_session_conf(spark):
         spark.conf.unset(join_fmt)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (state-server "
-    "protocol) — not shipped in this container; applyInPandasWithState "
-    "twins cover the semantics here",
-)
-def test_twin_tws_running_stats_matches_batch(spark, sf_dir, stream_src, ckpt):
-    """transformWithStateInPandas twin: final per-user (n, total) equals
-    the batch reduce — state carried across micro-batches on the modern
-    typed-state API."""
-    sdf = twins.events_stream(spark, stream_src)
-    out = twins.run_stream_to_table(
-        twins.twin_running_stats_tws(sdf), "t_tws", ckpt
-    )
-    # Update mode emits one row per key per batch; keep the last per key.
-    finals = (
-        out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-        )
-    )
-    batch = stateful.op_reduce(spark, sf_dir).select(
-        "user_id",
-        "n_events",
-        F.round("total_value", 3).alias("total_value"),
-    )
-    assert finals.count() == batch.count()
-    assert finals.exceptAll(batch).count() == 0
 
 
 @pytest.fixture(scope="module")

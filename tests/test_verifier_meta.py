@@ -6,16 +6,7 @@ mismatch, plus sanity on the canonicalization rules the driver applies
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-from pathlib import Path
-
-_spec = importlib.util.spec_from_file_location(
-    "verify_local", Path(__file__).parents[1] / "scripts" / "verify_local.py"
-)
-_vl = importlib.util.module_from_spec(_spec)
-sys.modules.setdefault("verify_local", _vl)
-_spec.loader.exec_module(_vl)
+import verify_local as _vl
 
 
 def test_table_hash_is_order_insensitive_but_value_sensitive():
@@ -54,26 +45,28 @@ def test_collect_capped_refuses_unbounded(spark):
         raise AssertionError("cap must refuse oversized results")
 
 
-def test_gate_detects_a_doctored_oracle(spark, sf_dir):
+def test_gate_detects_a_doctored_oracle(spark, sf_dir, oracle_con):
     """End-to-end negative control: run a real query against a WRONG
-    oracle result and require the hash comparison to differ."""
-    import duckdb
-
+    oracle and require the gate to report a value hash mismatch."""
     from scala_reactivex_spark.plans.registry import registry
 
     spec = registry()["llm_dedup_exact"]
     sdf = spec.fn(spark, sf_dir)
-    srows = _vl.collect_capped(sdf)
-    scols = sdf.columns
-    con = duckdb.connect()
-    for t in ("documents",):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    good = con.execute(spec.oracle).fetchall()
-    gcols = [d[0] for d in con.description]
-    assert _vl.table_hash(scols, srows) == _vl.table_hash(gcols, good)
-    doctored = con.execute(
-        spec.oracle.replace("min(doc_id)", "min(doc_id) + 1")
-    ).fetchall()
-    assert _vl.table_hash(scols, srows) != _vl.table_hash(gcols, doctored)
+    assert _vl.check(sdf, oracle_con, spec.oracle)[1] == []
+    doctored = spec.oracle.replace("min(doc_id)", "min(doc_id) + 1")
+    assert doctored != spec.oracle
+    assert _vl.check(sdf, oracle_con, doctored)[1][0] == "value hash mismatch"
+
+
+def test_gate_refuses_non_scalar_and_int128_columns(spark, oracle_con):
+    """Values that agree still fail when the grading gate could not hash them:
+    an array output column, or an oracle column left as DuckDB int128."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(3).select(F.col("id").alias("n"))
+    ok = "SELECT CAST(range AS BIGINT) AS n FROM range(3)"
+    assert _vl.check(ids, oracle_con, ok)[1] == []
+    arr = ids.select(F.array("n").alias("n"))
+    assert "non-scalar" in _vl.check(arr, oracle_con, ok)[1][0]
+    wide = "SELECT CAST(range AS HUGEINT) AS n FROM range(3)"
+    assert "int128" in _vl.check(ids, oracle_con, wide)[1][0]
