@@ -125,6 +125,18 @@ def edited_unverified(name: str, module_name: str, green_round: int) -> bool:
     return row.get("verified_fp") != cur
 
 
+def with_verified(row: dict, cur: str | None, verified: str | None) -> dict:
+    """``row`` carrying ``verified_fp = verified`` — or none at all when
+    its ``graded_fp`` already covers the current source ``cur``, where a
+    stamp would say nothing the graded fingerprint does not.  The one
+    rule both ``stamp_verified`` and scripts/update_grade_fingerprints.py
+    apply."""
+    row = {k: v for k, v in row.items() if k != "verified_fp"}
+    if verified and cur != row.get("graded_fp"):
+        row["verified_fp"] = verified
+    return row
+
+
 def stamp_verified(names_to_modules: dict[str, str]) -> None:
     """Record that verify_local just re-confirmed these keys at their
     modules' current hashes (called by scripts/verify_local.py after an
@@ -134,7 +146,7 @@ def stamp_verified(names_to_modules: dict[str, str]) -> None:
         fp = current_module_fp(mod)
         if fp is None:
             continue
-        data.setdefault(name, {})["verified_fp"] = fp
+        data[name] = with_verified(data.get(name, {}), fp, fp)
     with open(SIDECAR, "w") as f:
         json.dump(data, f, indent=1, sort_keys=True)
     _SIDECAR_CACHE.clear()

@@ -1,36 +1,32 @@
 #!/usr/bin/env python
-"""Hot-key skew probe for the per-key ordered family (round-10 verdict
-"Next round" #2 — carried from round 9).
+"""Hot-key skew probe for the per-key ordered family.
 
 `rel_join_skew_salted` / `rel_skew_agg` prove the salted JOIN/AGG
-shapes, but the per-key ORDERED operators (running scan, debounce,
-session windows) had never been measured under a hot-key distribution.
-Their Spark plan is a window over ``PARTITION BY user_id ORDER BY ts,
-event_id``: all rows of one user land in one task and are sorted
-there, so a user holding a constant FRACTION of the corpus is the
-worst case — AQE's skew handling splits join/agg partitions, NOT sort
-partitions, so the hot task is irreducible without a two-level
-rewrite.
+shapes; the per-key ORDERED operators (running scan, debounce, session
+windows) are a window over ``PARTITION BY user_id ORDER BY ts,
+event_id``: all rows of one user land in one task and are sorted there,
+so a user holding a constant FRACTION of the corpus is the worst case —
+AQE's skew handling splits join/agg partitions, NOT sort partitions, so
+the hot task is irreducible without a two-level rewrite.
 
-This script builds two 1M-row events fixtures with identical row
+This script times each key on two events fixtures with identical row
 counts and time spans:
 
-  - uniform: events ×10, disjoint user ranges (15k users, the
-    sf10_events_probe ev_sf1 fixture — reused if already built);
+  - uniform: the scale probe's fixture at COPIES (``scale_probe.fixture``,
+    disjoint user ranges per copy);
   - hot-key: the SAME rows, except ~30% are remapped to user_id=1
-    (event_id % 10 < 3 — deterministic, spread evenly over time).
+    (event_id % 10 < 3 — deterministic, spread evenly over time); the
+    other tables are links to the uniform fixture's.
 
-and times each probe op on both in one warm session:
+Both run through the scale probe's standalone-cold timing loop:
 
-    SPARK_GRAFT_CPUS=32 python scripts/skew_probe.py
-    # env: SPARK_GRAFT_SF01 (default /root/testdata/sf0.1)
+    SPARK_GRAFT_CPUS=4 python scripts/skew_probe.py COPIES KEY...
+    # e.g. python scripts/skew_probe.py 10 op_scan_running_sum op_debounce
 
-Output: one JSON line per query {name, uniform_sec, hot_sec,
-skew_ratio} plus a summary line with the hot-key share; paste into
-SCALING.md.  skew_ratio ≈ 1 means the 32-way box absorbs a 300k-row
-single-key sort; a materially higher ratio marks where the documented
-salted two-level fallback (chunk-local prefix + chunk-offset rollup,
-the rewrite llm_pack_sequences' cumsum already uses) must kick in.
+Output: one JSON line per key {query, uniform_sec, hot_sec, skew_ratio}
+plus a summary line with the hot-key share.  skew_ratio ≈ 1 means the
+box absorbs the single-key sort; a materially higher ratio marks where
+the salted two-level rewrite (operators/salted.py) must take over.
 """
 
 from __future__ import annotations
@@ -38,134 +34,53 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-from pathlib import Path
 
-sys.path.insert(0, ".")
+from scale_probe import DIMENSIONS, GROW, ROOT, fixture, session, timings
 
-HOT_DIR = "/tmp/skew_probe_hot"
 HOT_FRAC_PCT = 30  # event_id % 10 < 3
 
-#: The verdict's three ordered ops plus the two cheapest stateful
-#: cousins that share the per-user sort (dedup, pairing) — they come
-#: free in the same session and widen the evidence.
-PROBE = (
-    "op_scan_running_sum",
-    "op_debounce",
-    "op_window_session",
-    "op_distinct_until_changed",
-    "op_pairwise",
-    # The salted two-level escape hatches (operators/salted.py) — their
-    # hot_sec next to the base op's is the hatch's payoff number.
-    "op_scan_running_sum_salted",
-    "op_debounce_salted",
-    "op_distinct_until_changed_salted",
-    "op_pairwise_salted",
-)
 
-
-def build_hot_fixture(uniform_dir: str) -> None:
-    """Same 1M rows as the uniform fixture, ~30% remapped to user 1."""
+def hot_fixture(uniform_dir: str, copies: int) -> str:
+    """``uniform_dir`` with ~30% of its events remapped to user 1."""
     import duckdb
 
-    out = Path(HOT_DIR)
-    if (out / "_DONE").exists():
-        return
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    out.mkdir(parents=True)
-    con = duckdb.connect()
-    for t in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "documents",
-        "embeddings",
-    ):
-        src = Path(uniform_dir) / f"{t}.parquet"
-        if src.exists():
-            con.sql(
-                f"COPY (SELECT * FROM '{src}') TO '{out}/{t}.parquet' "
-                "(FORMAT PARQUET)"
-            )
-    con.sql(
-        f"""COPY (
-            SELECT event_id, ts,
-                   CASE WHEN event_id % 10 < {HOT_FRAC_PCT // 10}
-                        THEN 1 ELSE user_id END AS user_id,
-                   event_type, value, props
-            FROM '{uniform_dir}/events.parquet'
-        ) TO '{out}/events.parquet' (FORMAT PARQUET)"""
-    )
-    (out / "_DONE").touch()
+    out = os.path.join(ROOT, f"x{copies}_hot")
+    os.makedirs(out, exist_ok=True)
+    for t in DIMENSIONS + tuple(GROW):
+        link = os.path.join(out, f"{t}.parquet")
+        if t != "events" and not os.path.lexists(link):
+            os.symlink(os.path.abspath(f"{uniform_dir}/{t}.parquet"), link)
+    dst = os.path.join(out, "events.parquet")
+    if not os.path.exists(dst):
+        duckdb.sql(
+            f"""COPY (
+                SELECT * REPLACE (CASE WHEN event_id % 10 < {HOT_FRAC_PCT // 10}
+                                       THEN 1 ELSE user_id END AS user_id)
+                FROM '{uniform_dir}/events.parquet'
+            ) TO '{dst}.tmp' (FORMAT PARQUET)"""
+        )
+        os.replace(dst + ".tmp", dst)
+    return out
 
 
-def main() -> None:
-    sf01 = os.environ.get("SPARK_GRAFT_SF01", "/root/testdata/sf0.1")
+def main(argv: list[str]) -> int:
+    if len(argv) < 2 or not argv[0].isdigit():
+        print("usage: skew_probe.py COPIES KEY...", file=sys.stderr)
+        return 2
+    copies, keys = int(argv[0]), argv[1:]
+    uniform_dir = fixture(copies)
+    hot_dir = hot_fixture(uniform_dir, copies)
+    import duckdb
 
-    from scripts import sf10_events_probe
-
-    # SPARK_GRAFT_SKEW_BASE=sf10 probes at 10M rows (3M on the hot key
-    # — a single task sorting 3M rows), the sharper second point.
-    if os.environ.get("SPARK_GRAFT_SKEW_BASE", "sf1") == "sf10":
-        uniform_dir = sf10_events_probe.EV_SF10_DIR
-        copies = 100
-        global HOT_DIR
-        HOT_DIR = HOT_DIR + "10"
-    else:
-        uniform_dir = sf10_events_probe.EV_SF1_DIR
-        copies = 10
-    sf10_events_probe.build_events_fixture(sf01, uniform_dir, copies)
-    build_hot_fixture(uniform_dir)
-
-    from scala_reactivex_spark.plans.registry import registry
-    from scala_reactivex_spark.session import get_spark
-
-    spark = get_spark("skew-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = registry()
-
-    # SPARK_GRAFT_SKEW_PROBE=a,b,c overrides the probe list (round 12:
-    # the _auto dispatch wrappers get their payoff measured on the same
-    # fixtures the hatches were graded on).
-    global PROBE
-    env_probe = tuple(
-        n
-        for n in os.environ.get("SPARK_GRAFT_SKEW_PROBE", "").split(",")
-        if n
-    )
-    if env_probe:
-        PROBE = env_probe
-
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t0, 3)
-
-    # Warm both fixtures (scan + footer cache) before timing.
-    run("op_map", uniform_dir)
-    run("op_map", HOT_DIR)
-
-    # Record the actual hot share so the artifact is self-describing.
-    from pyspark.sql import functions as F
-
-    from scala_reactivex_spark.sources.catalog import table
-
-    ev = table(spark, HOT_DIR, "events")
-    total = ev.count()
-    hot = ev.where(F.col("user_id") == 1).count()
-
+    total, hot = duckdb.sql(
+        "SELECT count(*), count(*) FILTER (WHERE user_id = 1) "
+        f"FROM '{hot_dir}/events.parquet'"
+    ).fetchone()
+    spark = session(copies, "skew-probe")
     rows = []
-    for name in PROBE:
-        t_uni = run(name, uniform_dir)
-        t_hot = run(name, HOT_DIR)
+    for name, ((t_uni, _), (t_hot, _)) in timings(
+        spark, keys, [uniform_dir, hot_dir]
+    ):
         row = {
             "query": name,
             "uniform_sec": t_uni,
@@ -178,18 +93,22 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "hot_key_skew_probe",
+                "copies": copies,
+                "cores": spark.sparkContext.defaultParallelism,
                 "rows_total": total,
                 "hot_key_rows": hot,
                 "hot_share": round(hot / total, 4),
                 "worst_skew_ratio": max(
-                    r["skew_ratio"] for r in rows if r["skew_ratio"]
+                    (r["skew_ratio"] for r in rows if r["skew_ratio"]),
+                    default=None,
                 ),
                 "rows": rows,
             }
         ),
         flush=True,
     )
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))

@@ -104,14 +104,13 @@ def main() -> int:
         graded = blob_fp(commit_of_round[rnd], rel)
         if graded is None:
             continue
-        row = {"round": rnd, "graded_fp": graded}
         cur = grade_fp.file_fp(path)
-        verified = (old.get(name) or {}).get("verified_fp")
-        if cur != graded:
-            n_edited += 1
-            if verified:
-                row["verified_fp"] = verified
-        out[name] = row
+        n_edited += cur != graded
+        out[name] = grade_fp.with_verified(
+            {"round": rnd, "graded_fp": graded},
+            cur,
+            (old.get(name) or {}).get("verified_fp"),
+        )
 
     with open(grade_fp.SIDECAR, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)

@@ -69,6 +69,25 @@ def test_local_verification_clears_the_flag(sidecar):
     assert data["k"]["verified_fp"] == grade_fp.current_module_fp(MOD)
 
 
+def test_stamp_only_where_the_graded_fingerprint_is_stale(sidecar):
+    """A key whose graded fingerprint is current gets no stamp (an old
+    one is dropped); an edited key does."""
+    cur = grade_fp.current_module_fp(MOD)
+    _write(
+        sidecar,
+        {
+            "current": {"round": 9, "graded_fp": cur, "verified_fp": cur},
+            "edited": {"round": 9, "graded_fp": "deadbeef"},
+        },
+    )
+    grade_fp.stamp_verified({"current": MOD, "edited": MOD})
+    data = json.loads(sidecar.read_text())
+    assert data["current"] == {"round": 9, "graded_fp": cur}
+    assert data["edited"] == {
+        "round": 9, "graded_fp": "deadbeef", "verified_fp": cur,
+    }
+
+
 def test_fingerprint_ignores_docs_but_not_code():
     """A docstring or comment edit keeps a module's fingerprint, so it
     cannot reorder the grading window; a code edit changes it."""
