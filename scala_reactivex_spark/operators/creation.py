@@ -131,17 +131,15 @@ def repeat(spark: SparkSession, value, n: int) -> DataFrame:
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per fixture dir) a day-partitioned copy of events
-    under ``<repo>/.cache`` — the hive layout whose read side exercises
-    partition pruning, the mechanism that turns a 100 TB scan into a
-    read of only the matching partitions."""
+    """Materialize (once per fixture table content) a day-partitioned
+    copy of events at its ``layout_dir`` — the hive layout whose read side
+    exercises partition pruning, the mechanism that turns a 100 TB scan
+    into a read of only the matching partitions."""
     import os
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(repo_root, ".cache", f"events_by_day_{base}")
+    from scala_reactivex_spark.operators.llm_extras import layout_dir
+
+    out = layout_dir("events_by_day", sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = table(spark, sf_dir, "events")
         (
@@ -981,17 +979,9 @@ def _zordered_events(spark: SparkSession, sf_dir: str) -> str:
     redirect it and pay the rewrite (the build-inclusive contract)."""
     import os
 
-    from scala_reactivex_spark.operators.llm_extras import _fixture_tag
+    from scala_reactivex_spark.operators.llm_extras import layout_dir
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(repo_root, ".cache")
-    )
-    out = os.path.join(
-        root, f"events_zorder_{_fixture_tag(sf_dir, 'events')}"
-    )
+    out = layout_dir("events_zorder", sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = table(spark, sf_dir, "events").select(
             "event_id",

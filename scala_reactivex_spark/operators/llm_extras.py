@@ -90,6 +90,22 @@ def _fixture_tag(sf_dir: str, tbl: str) -> str:
     )
     return f"{base}_{fp}"
 
+
+def layout_dir(prefix: str, sf_dir: str, tbl: str) -> str:
+    """Directory of a derived on-disk layout of fixture table ``tbl``:
+    ``<root>/<prefix>_<_fixture_tag>``, keyed by the table's content, under
+    ``SPARK_GRAFT_LAYOUT_CACHE`` (default ``<repo>/.cache``) so bench.py's
+    fresh regime and the scale probe's cold one redirect it and pay the
+    build."""
+    repo_root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    root = os.environ.get(
+        "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(repo_root, ".cache")
+    )
+    return os.path.join(root, f"{prefix}_{_fixture_tag(sf_dir, tbl)}")
+
+
 #: RAG chunking geometry: 24-token windows, stride 16 (8-token overlap).
 CHUNK_W = 24
 CHUNK_S = 16
@@ -245,40 +261,37 @@ def _bucketed_table(
     spark: SparkSession, sf_dir: str, tbl: str, key: str
 ) -> DataFrame:
     """Attach (and on first use, materialize) a bucketed copy of a
-    fixture table under ``<repo>/.cache/bucketdemo``.
+    fixture table at its :func:`layout_dir`.
 
     The in-memory catalog forgets tables between sessions, but the
-    bucketed FILES persist — so each session re-issues the CREATE TABLE
-    DDL (metadata only, carries the bucket spec) and only populates when
-    the location is empty.  This mirrors production exactly: the
-    bucketed layout is written once; every later session re-attaches the
-    metastore entry and reads co-partitioned buckets with no shuffle."""
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    warehouse = os.path.join(repo_root, ".cache", "bucketdemo")
-    base = _fixture_tag(sf_dir, tbl)
-    name = f"bucketdemo.{tbl}_{base}"
-    loc = os.path.join(warehouse, f"{tbl}_{base}")
+    bucketed FILES persist — so each call re-issues the CREATE TABLE DDL
+    (metadata only, carries the bucket spec) and only populates when the
+    location holds no completed write.  This mirrors production exactly:
+    the bucketed layout is written once; every later session re-attaches
+    the metastore entry and reads co-partitioned buckets with no shuffle.
+    The entry is dropped and re-created on every call (an external
+    table: the drop keeps the files), so a session whose layout root
+    moved never reads the old root's copy."""
+    loc = layout_dir(f"bucketdemo_{tbl}", sf_dir, tbl)
+    name = f"bucketdemo.{os.path.basename(loc)}"
+    src = table(spark, sf_dir, tbl)
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
     spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bucketdemo LOCATION '{warehouse}'"
+        "CREATE DATABASE IF NOT EXISTS bucketdemo "
+        f"LOCATION '{os.path.dirname(loc)}/bucketdemo'"
     )
-    if not spark.catalog.tableExists(name):
-        src = table(spark, sf_dir, tbl)
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in src.schema
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {N_BUCKETS} BUCKETS "
-            f"LOCATION '{loc}'"
-        )
-        # Populate only when no COMPLETED write exists: _SUCCESS lands
-        # last, so a concurrent session's in-flight write is not
-        # mistaken for data (head(1) on partial files would be).
-        if not os.path.exists(os.path.join(loc, "_SUCCESS")):
-            src.write.mode("overwrite").insertInto(name)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(
+        f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+        f"INTO {N_BUCKETS} BUCKETS "
+        f"LOCATION '{loc}'"
+    )
+    # Populate only when no COMPLETED write exists: _SUCCESS lands last,
+    # so a concurrent session's in-flight write is not mistaken for data
+    # (head(1) on partial files would be).
+    if not os.path.exists(os.path.join(loc, "_SUCCESS")):
+        src.write.mode("overwrite").insertInto(name)
     return spark.table(name)
 
 
@@ -518,16 +531,12 @@ def llm_chunk_retrieval_recall(
 
 
 def _evolved_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per fixture dir) a two-generation parquet layout
-    of events under ``<repo>/.cache``: generation v1 carries the original
-    columns, generation v2 adds a ``vlen`` column — the schema-drift
-    shape every long-lived 100 TB dataset accumulates as producers
-    evolve."""
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = _fixture_tag(sf_dir, "events")
-    out = os.path.join(repo_root, ".cache", f"events_evolved_{base}")
+    """Materialize (once per fixture table content) a two-generation
+    parquet layout of events at its :func:`layout_dir`: generation v1
+    carries the original columns, generation v2 adds a ``vlen`` column —
+    the schema-drift shape every long-lived 100 TB dataset accumulates as
+    producers evolve."""
+    out = layout_dir("events_evolved", sf_dir, "events")
     marker = os.path.join(out, "_DONE")
     if not os.path.exists(marker):
         ev = table(spark, sf_dir, "events").select(

@@ -1337,8 +1337,8 @@ def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
     one task per planned output file (``repartition(shard, out_file)``
     before ``partitionBy`` keeps the writer at one file per planned
     file — no small-file fan-out, which is the entire point of
-    OPTIMIZE).  Same cache-root + fixture-tag convention as
-    creation._zordered_events: keyed by fixture CONTENT, redirected by
+    OPTIMIZE).  Named by ``llm_extras.layout_dir`` like every derived
+    layout: keyed by fixture CONTENT, redirected by
     SPARK_GRAFT_LAYOUT_CACHE so the bench's fresh regime pays the
     rewrite.  The cache name carries (a) the TARGET — an
     env-overridden target (the sf100 probe) must never serve a layout
@@ -1352,21 +1352,12 @@ def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
     import re
     import shutil
 
-    from scala_reactivex_spark.operators.llm_extras import _fixture_tag
+    from scala_reactivex_spark.operators.llm_extras import layout_dir
     from scala_reactivex_spark.plans.memo import _builder_src_tag
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(repo_root, ".cache")
-    )
-    tag = _fixture_tag(sf_dir, "documents")
-    out = os.path.join(
-        root,
-        f"docs_compact_{tag}_t{COMPACT_TARGET}"
-        f"_{_builder_src_tag(_compacted_docs)}",
-    )
+    base = layout_dir("docs_compact", sf_dir, "documents")
+    root = os.path.dirname(base)
+    out = f"{base}_t{COMPACT_TARGET}_{_builder_src_tag(_compacted_docs)}"
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         assign = _compaction_offsets(spark, sf_dir).select(
             "shard",
@@ -1399,7 +1390,7 @@ def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
         # dir still cannot grow without bound.  Segment-shape match,
         # never a bare prefix test.
         gen = re.compile(
-            re.escape(f"docs_compact_{tag}_t")
+            re.escape(f"{os.path.basename(base)}_t")
             + r"\d+(_([0-9a-f]{8}|nosrc000))?"
         )
         if os.path.isdir(root):

@@ -18,6 +18,15 @@ Determinism-critical confs (SURVEY.md §2.11):
 Scale posture (100 TB north star): AQE on (runtime join re-planning, skew
 join splitting, partition coalescing); shuffle partitions sized by env so the
 same code runs local[4] in tests and 1000-executor clusters unchanged.
+
+Python workers start through :mod:`scala_reactivex_spark.worker_daemon`
+(``spark.python.daemon.module``, set by :func:`get_spark` only): pyspark's
+own daemon with the spark-core jar taken off the workers' ``sys.path``, so
+the ``importlib.invalidate_caches()`` at the start of every Python task no
+longer re-reads the jar's directory.  It is set only when a worker can
+import the engine: a local worker starts in the driver's working directory
+with the driver's ``PYTHONPATH``, so a driver that found the engine some
+other way keeps pyspark's own daemon instead of a daemon that cannot start.
 """
 
 from __future__ import annotations
@@ -52,6 +61,23 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _workers_import_engine() -> bool:
+    """Whether a local Python worker finds this package: its parent
+    directory is the working directory, on ``PYTHONPATH``, or a
+    site-packages directory."""
+    import site
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+    ]
+    return any(
+        os.path.realpath(e) == os.path.realpath(root) for e in entries if e
+    )
+
+
 def get_spark(
     app_name: str = "scala-reactivex-spark",
     master: str | None = None,
@@ -77,6 +103,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
+    if _workers_import_engine():
+        builder = builder.config(
+            "spark.python.daemon.module", "scala_reactivex_spark.worker_daemon"
+        )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return configure_session(builder.getOrCreate())

@@ -56,17 +56,23 @@ DEFAULT_TWINS: tuple[str, ...] = (
 
 class _ProgressTap(StreamingQueryListener):
     """Collects triggerExecution ms for every progress event with input
-    rows — attached around each twin run, detached after."""
+    rows of the run's own query — attached around each twin run, detached
+    after.  Each twin run starts exactly one query, and Spark delivers a
+    query's start event before ``start()`` returns, so the run's query is
+    the first one started while the tap is attached; the listener is
+    session-wide, and any other stream's progress is left out."""
 
     def __init__(self) -> None:
         self.trigger_ms: list[int] = []
+        self.query_id: str | None = None
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        if self.query_id is None:
+            self.query_id = str(event.id)
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        if p.numInputRows > 0:
+        if str(p.id) == self.query_id and p.numInputRows > 0:
             self.trigger_ms.append(int(p.durationMs["triggerExecution"]))
 
     def onQueryIdle(self, event) -> None:  # noqa: N802

@@ -34,11 +34,35 @@ SERVING_STREAM_CONFS = {
 }
 
 
+#: The checkpoint file manager of a serving stream whose checkpoint lives
+#: on the local filesystem (see :func:`serving_stream_conf`).
+LOCAL_CHECKPOINT_CONFS = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
+
+
+def _checkpoint_scheme(spark, checkpoint_dir: str) -> str:
+    """The filesystem scheme a checkpoint location resolves to: its own
+    scheme, else the default filesystem's (``fs.defaultFS``)."""
+    jvm = spark._jvm
+    scheme = jvm.org.apache.hadoop.fs.Path(checkpoint_dir).toUri().getScheme()
+    if scheme is None:
+        scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+            spark._jsc.hadoopConfiguration()
+        ).getScheme()
+    return scheme
+
+
 @contextlib.contextmanager
-def serving_stream_conf(spark):
-    """Scope the serving confs around a stream ``.start()``: the
-    state-partition count, the RocksDB state store with changelog
-    checkpointing, and join state format 3.
+def serving_stream_conf(spark, checkpoint_dir: str):
+    """Scope the serving confs around a stream ``.start()`` that
+    checkpoints to ``checkpoint_dir``: the state-partition count, the
+    RocksDB state store with changelog checkpointing, join state format
+    3, and on a local checkpoint the FileSystem-based checkpoint file
+    manager.
 
     A stateful operator's per-trigger cost is per state store, not per
     row.  With the HDFS-backed store every store's commit writes delta
@@ -66,19 +90,40 @@ def serving_stream_conf(spark):
     RocksDB also keeps state rows off the executor heap, where the
     HDFS-backed store held every row plus its cached versions.
 
+    A third lever cuts the cost per checkpoint file.  Spark's default
+    checkpoint file manager goes through Hadoop's ``FileContext``, whose
+    rename on a ``file:`` path calls ``FileUtil.readLink`` and so starts
+    a ``readlink`` process for every file it commits: the state store's
+    changelog and its checksum file, and the offset and commit logs
+    (~165 spawns per ``rx_stream`` trigger).  When ``checkpoint_dir``
+    resolves to the ``file`` scheme, ``spark.sql.streaming.
+    checkpointFileManagerClass`` selects the ``FileSystem``-based manager
+    instead, which renames with no spawn (0 ``readlink`` per run, and the
+    offset-log write ``walCommit`` from 25 to 8.5 ms per trigger; see
+    RUNTIME.md "Fixed cost per trigger").  Spark
+    still wraps it in its checksum manager, so every ``N.changelog.crc``
+    is written, and Hadoop still writes its ``.crc`` side files.  Any
+    other scheme keeps Spark's own choice: on HDFS only ``FileContext``
+    renames atomically without overwriting, which the offset log's
+    write-once batches rely on.
+
     Spark records the partition count, the provider and the join format
     in each checkpoint's offset log, so only NEW checkpoints change: a
     query restored from an existing checkpoint keeps its frozen values,
-    and replays and crash restarts are untouched.  Each conf is restored
-    (or unset again) as soon as ``start()`` returns -- the query has
-    cloned the session conf by then -- so batch queries and user-owned
-    streams never inherit them."""
+    and replays and crash restarts are untouched.  The file manager is
+    not frozen; it only changes how files are written, so a checkpoint
+    begun under either manager restarts under the other.  Each conf is
+    restored (or unset again) as soon as ``start()`` returns -- the
+    query has cloned the session conf by then -- so batch queries and
+    user-owned streams never inherit them."""
     confs = {
         "spark.sql.shuffle.partitions": os.environ.get(
             "SPARK_GRAFT_STATE_PARTITIONS", "8"
         ),
         **SERVING_STREAM_CONFS,
     }
+    if _checkpoint_scheme(spark, checkpoint_dir) == "file":
+        confs.update(LOCAL_CHECKPOINT_CONFS)
     prev = {key: spark.conf.get(key, None) for key in confs}
     for key, value in confs.items():
         spark.conf.set(key, value)
@@ -122,7 +167,7 @@ def idempotent_parquet_sink(out_dir: str):
 def run_foreach_batch(stream_df: DataFrame, write_batch, checkpoint_dir: str):
     """Drain a stream through ``write_batch(batch_df, batch_id)``
     (availableNow), started under :func:`serving_stream_conf`."""
-    with serving_stream_conf(stream_df.sparkSession):
+    with serving_stream_conf(stream_df.sparkSession, checkpoint_dir):
         query = (
             stream_df.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint_dir)

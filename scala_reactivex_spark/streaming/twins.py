@@ -610,14 +610,13 @@ def run_stream_to_table(
     Durable sinks (parquet/foreachBatch with idempotent writes) get
     exactly-once resume from the same checkpoint — that's the production
     path; this runner is the test/debug terminal."""
-    with serving_stream_conf(stream_df.sparkSession):
+    checkpoint = os.path.join(checkpoint_dir, name)
+    with serving_stream_conf(stream_df.sparkSession, checkpoint):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option(
-                "checkpointLocation", os.path.join(checkpoint_dir, name)
-            )
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )

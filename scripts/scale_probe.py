@@ -8,9 +8,9 @@ fixture and report how far each key's cost grows against the data.
 
 SMALL and BIG are copy counts of the base (1, 10, 100, 1000 — sf0.1,
 sf1, sf10, sf100); 1 is the base itself.  ``fixture(copies)`` writes
-``<tmp>/scale_probe/x<copies>/`` once and reuses it.  Dimension tables
-(region, nation, customer, supplier, part) are copied as-is; each fact
-table grows by one rule (``GROW``) in one DuckDB statement over
+``<tmp>/scale_probe/x<copies>_<rules digest>/`` once and reuses it.
+Dimension tables (region, nation, customer, supplier, part) are copied
+as-is; each fact table grows by one rule (``GROW``) in one DuckDB statement over
 ``range(copies)``, so facts grow and dimensions do not, as at real scale:
 
   - documents: copy i adds i·10⁶ to doc_id and suffixes every token with
@@ -18,12 +18,15 @@ table grows by one rule (``GROW``) in one DuckDB statement over
     constant while corpus and vocabulary grow (the conservative model for
     LSH banding: bucket count grows, per-bucket density must not).
   - embeddings: copy i adds i·10⁶ to vec_id and applies one of 1024
-    (permutation, sign, shift-level) classes: permutation p = (i//2) % 128
-    (p < 64 rotates the 64 coordinates by p, else reverses then rotates by
-    p − 64), sign ± by i % 2, shift 0.064·(i//256 − 1.5).  Permutation and
-    negation keep norms and within-copy geometry while decorrelating the
-    copies; the shifts stay small enough not to saturate sign-LSH
-    projections.
+    signed coordinate permutations: permutation p = i % 128 (p < 64
+    rotates the 64 coordinates by p, else reverses then rotates by
+    p − 64), then sign mask h = i // 128, the Walsh–Hadamard row that
+    negates coordinate j (0-based) when popcount(h & j) is odd.  Copy 0
+    is the base.  Every transform is orthogonal, so norms and within-copy
+    geometry are kept, and no component is shared: two copies with the
+    same permutation differ in sign on exactly half of the coordinates
+    (distinct Hadamard rows), so a vector and its copies stay
+    uncorrelated.  The 1024 transforms are distinct.
   - events: copy i adds i·10⁷ to event_id and i·10⁴ to user_id, ts
     unchanged — the time span is fixed and the user count grows, so
     per-key history depth stays constant while key cardinality rises.
@@ -51,6 +54,7 @@ imported inside the functions that use them.
 from __future__ import annotations
 
 import gc
+import hashlib
 import json
 import os
 import shutil
@@ -73,13 +77,13 @@ GROW = {
             string_split(text, ' '), x -> x || '_' || i), 'string_agg', ' ')
         END AS text""",
     "embeddings": """vec_id + i * 1000000 AS vec_id,
-        list_transform(range(1, 65), j -> CAST(
-            (CASE WHEN i % 2 = 0 THEN 1 ELSE -1 END)
-            * embedding[CASE WHEN (i // 2) % 128 < 64
-                             THEN (j - 1 + (i // 2) % 128) % 64 + 1
-                             ELSE 64 - (j - 1 + (i // 2) % 128 - 64) % 64
-                        END]
-            + 0.064 * (i // 256 - 1.5) AS FLOAT)) AS embedding""",
+        list_transform(range(1, 65), j ->
+            (CASE WHEN bit_count((i // 128) & (j - 1)) % 2 = 0
+                  THEN 1 ELSE -1 END)
+            * embedding[CASE WHEN i % 128 < 64
+                             THEN (j - 1 + i % 128) % 64 + 1
+                             ELSE 64 - (j - 1 + i % 128 - 64) % 64
+                        END]) AS embedding""",
     "events": """event_id + i * 10000000 AS event_id,
         user_id + i * 10000 AS user_id""",
     "lineitem": "l_orderkey + i * 10000000 AS l_orderkey",
@@ -91,15 +95,27 @@ GROW = {
 STATS = {"llm_dedup_minhash_stats", "llm_dedup_embed_lsh_stats"}
 
 
+def grown(table: str, src: str, copies: int) -> str:
+    """The DuckDB query of fact ``table`` (read from parquet ``src``)
+    grown ``copies``-fold by its ``GROW`` rule."""
+    return (
+        f"SELECT * EXCLUDE (i) REPLACE ({GROW[table]}) "
+        f"FROM range({copies}) c(i), '{src}'"
+    )
+
+
 def fixture(copies: int, base: str = BASE, root: str = ROOT) -> str:
     """The directory of the base fixture grown ``copies``-fold (built
-    once; 1 is the base itself).  Each table is written under a temp
-    name and renamed, so a cut-off build leaves no half-written table."""
+    once; 1 is the base itself).  The directory name carries a digest of
+    the ``GROW`` rules, so a changed rule never reuses a fixture built by
+    the old one.  Each table is written under a temp name and renamed,
+    so a cut-off build leaves no half-written table."""
     if copies == 1:
         return base
     import duckdb
 
-    out = os.path.join(root, f"x{copies}")
+    rules = hashlib.sha256(json.dumps(GROW, sort_keys=True).encode())
+    out = os.path.join(root, f"x{copies}_{rules.hexdigest()[:8]}")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in DIMENSIONS + tuple(GROW):
@@ -110,9 +126,7 @@ def fixture(copies: int, base: str = BASE, root: str = ROOT) -> str:
         tmp = dst + ".tmp"
         if t in GROW:
             con.sql(
-                f"COPY (SELECT * EXCLUDE (i) REPLACE ({GROW[t]}) "
-                f"FROM range({copies}) c(i), '{src}') "
-                f"TO '{tmp}' (FORMAT PARQUET)"
+                f"COPY ({grown(t, src, copies)}) TO '{tmp}' (FORMAT PARQUET)"
             )
         else:
             shutil.copyfile(src, tmp)

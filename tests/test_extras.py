@@ -659,3 +659,44 @@ def test_twin_ann_spann_serving_equals_batch(spark, sf_dir, tmp_path):
         twins.embeddings_stream(spark, src), spark, sf_dir, out_dir, ckpt
     )
     assert {tuple(r) for r in again.collect()} == got
+
+
+def test_layout_caches_are_keyed_by_fixture_content(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The day-partitioned, two-generation and bucketed layouts of two
+    fixtures that share a directory basename (``<tmp>/a/fx`` holding
+    sf0.001, ``<tmp>/b/fx`` holding sf0.01) are two layouts, built under
+    ``SPARK_GRAFT_LAYOUT_CACHE``: each key holds to its DuckDB oracle on
+    both copies."""
+    import os
+    import shutil
+
+    import verify_local
+
+    from scala_reactivex_spark.plans.registry import registry
+
+    layouts = tmp_path / "layouts"
+    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", str(layouts))
+    keys = ("src_partition_prune", "src_schema_evolution", "src_bucketed_join")
+    for copy, sf in (("a", "sf0.001"), ("b", "sf0.01")):
+        fx = str(tmp_path / copy / "fx")
+        shutil.copytree(os.path.join(os.path.dirname(sf_dir), sf), fx)
+        con = verify_local.oracle_connection(fx)
+        try:
+            for key in keys:
+                spec = registry()[key]
+                _, problems = verify_local.check(
+                    spec.fn(spark, fx), con, spec.oracle
+                )
+                assert problems == [], (sf, key, problems)
+        finally:
+            con.close()
+    built = sorted(os.listdir(layouts))
+    for prefix in (
+        "events_by_day_fx_",
+        "events_evolved_fx_",
+        "bucketdemo_lineitem_fx_",
+        "bucketdemo_orders_fx_",
+    ):
+        assert sum(d.startswith(prefix) for d in built) == 2, (prefix, built)

@@ -50,3 +50,39 @@ def test_settle_count_skips_empty_part_files(tmp_path):
     (src / "_SUCCESS").write_text("")
     assert _n_source_files(str(src)) == 2
     assert _n_source_files(None) == 1
+
+
+def test_tap_counts_only_its_own_query(spark, sf_dir, tmp_path):
+    """The progress listener is session-wide: a second stream running
+    beside the measured twin adds no batches to its count."""
+    import time
+
+    from scala_reactivex_spark.streaming.latency import (
+        measure_serving_latency,
+    )
+
+    other = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", 100)
+        .load()
+        .writeStream.format("noop")
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 30
+        while not other.lastProgress and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert other.lastProgress, "the second stream must be running"
+        res = measure_serving_latency(
+            spark,
+            sf_dir,
+            str(tmp_path / "lat"),
+            reps=2,
+            only={"twin_zorder_route"},
+        )
+        assert other.isActive
+    finally:
+        other.stop()
+    row = res["twin_zorder_route"]
+    assert row["batches"] == row["expected_batches"] >= 2

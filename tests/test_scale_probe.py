@@ -90,6 +90,39 @@ def test_embedding_copies_share_no_vector(grown):
     )
 
 
+def test_embedding_copies_are_distinct_signed_permutations():
+    """At 1024 copies: copy 0 is the base, every copy keeps its base
+    vector's norm, and no two copies share a vector."""
+    src = f"{BASE}/embeddings.parquet"
+    con = duckdb.connect()
+    con.sql(f"CREATE TABLE g AS {scale_probe.grown('embeddings', src, 1024)}")
+
+    def one(sql: str):
+        return con.sql(sql).fetchone()[0]
+
+    copy0 = "FROM g WHERE vec_id < 1000000"
+    for a, b in ((copy0, f"FROM '{src}'"), (f"FROM '{src}'", copy0)):
+        assert one(f"SELECT count(*) FROM ({a} EXCEPT ALL {b})") == 0
+    norm = "sqrt(list_dot_product({0}.embedding, {0}.embedding))"
+    assert one(
+        f"SELECT max(abs({norm.format('g')} - {norm.format('b')})) "
+        f"FROM g JOIN '{src}' b ON g.vec_id % 1000000 = b.vec_id"
+    ) < 1e-6
+    assert one("SELECT count(DISTINCT embedding) FROM g") == 1024 * one(
+        f"SELECT count(DISTINCT embedding) FROM '{src}'"
+    )
+
+
+def test_changed_rule_builds_a_new_fixture(tmp_path, monkeypatch):
+    """The fixture directory is keyed by the rules: a changed rule never
+    reuses a fixture grown by the old one."""
+    first = scale_probe.fixture(2, BASE, str(tmp_path))
+    monkeypatch.setitem(
+        scale_probe.GROW, "orders", "o_orderkey + i * 20000000 AS o_orderkey"
+    )
+    assert scale_probe.fixture(2, BASE, str(tmp_path)) != first
+
+
 def test_probe_imports_only_the_stdlib():
     """Loading the probe must not pull in DuckDB, Spark or the engine."""
     code = (

@@ -261,14 +261,18 @@ def test_legacy_join_checkpoint_restarts_under_serving_conf(
     spark, sf_dir, join_tranches, tmp_path
 ):
     """A join checkpoint made without the serving conf (HDFS-backed store,
-    join format 2, as a user-owned stream or an older checkpoint has)
-    restarts under it with its frozen provider, format and partition
-    count, and the restored state still finds every pair."""
+    join format 2 and the FileContext checkpoint manager, as a user-owned
+    stream or an older checkpoint has) restarts under it with its frozen
+    provider, format and partition count and the FileSystem checkpoint
+    manager, and the restored state still finds every pair."""
     src = _deliver(join_tranches[:2], tmp_path / "src")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     sdf = twins.twin_interval_join(twins.events_stream(spark, src))
+    managers: list = []
     legacy = (
-        sdf.writeStream.foreachBatch(sinks.idempotent_parquet_sink(out))
+        sdf.writeStream.foreachBatch(
+            _recording(sinks.idempotent_parquet_sink(out), managers)
+        )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
@@ -276,28 +280,34 @@ def test_legacy_join_checkpoint_restarts_under_serving_conf(
     legacy.awaitTermination()
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert _join_stores(legacy.recentProgress) == [(4 * n, n, False)] * 2
+    assert set(managers) == {None}
 
     _deliver(join_tranches[2:], src)
-    restarted = sinks.run_with_idempotent_sink(
-        twins.twin_interval_join(twins.events_stream(spark, src)), out, ckpt
+    managers.clear()
+    restarted = sinks.run_foreach_batch(
+        twins.twin_interval_join(twins.events_stream(spark, src)),
+        _recording(sinks.idempotent_parquet_sink(out), managers),
+        ckpt,
     )
     assert _join_stores(restarted.recentProgress) == [(4 * n, n, False)] * 2
+    assert set(managers) == {FS_MANAGER}
     assert _pairs(spark.read.parquet(out)) == _batch_pairs(sf_dir)
 
 
-def test_serving_stream_conf_restores_the_session_conf(spark):
+def test_serving_stream_conf_restores_the_session_conf(spark, tmp_path):
     """The serving confs hold only inside the block: an unset conf is
     unset again after it, a caller's own value comes back unchanged, and
     both hold when the block raises."""
     join_fmt = "spark.sql.streaming.join.stateFormatVersion"
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    unset = [k for k in sinks.SERVING_STREAM_CONFS if k != join_fmt]
+    confs = {**sinks.SERVING_STREAM_CONFS, **sinks.LOCAL_CHECKPOINT_CONFS}
+    unset = [k for k in confs if k != join_fmt]
     assert all(spark.conf.get(k, None) is None for k in unset)
     spark.conf.set(join_fmt, "2")
     try:
         with pytest.raises(RuntimeError):
-            with sinks.serving_stream_conf(spark):
-                for key, value in sinks.SERVING_STREAM_CONFS.items():
+            with sinks.serving_stream_conf(spark, str(tmp_path)):
+                for key, value in confs.items():
                     assert spark.conf.get(key) == value
                 assert spark.conf.get("spark.sql.shuffle.partitions") == (
                     os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
@@ -310,6 +320,68 @@ def test_serving_stream_conf_restores_the_session_conf(spark):
         spark.conf.unset(join_fmt)
 
 
+#: The checkpoint manager conf and the class a local checkpoint selects.
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = sinks.LOCAL_CHECKPOINT_CONFS[MANAGER_CONF]
+
+
+def _recording(write_batch, managers: list):
+    """``write_batch`` that first records the checkpoint manager conf of
+    the running query's session (the session conf it cloned at start)."""
+
+    def run(batch_df, batch_id):
+        managers.append(batch_df.sparkSession.conf.get(MANAGER_CONF, None))
+        write_batch(batch_df, batch_id)
+
+    return run
+
+
+def test_checkpoint_manager_follows_the_checkpoint_scheme(spark, tmp_path):
+    """A checkpoint that resolves to the local filesystem, as a bare path
+    or a ``file:`` URI, selects the FileSystem checkpoint manager; any
+    other scheme leaves Spark's own choice.  Either way the conf is
+    unset again after the block."""
+    for location, want in (
+        (str(tmp_path), FS_MANAGER),
+        (tmp_path.as_uri(), FS_MANAGER),
+        ("s3a://b/ckpt", None),
+    ):
+        with sinks.serving_stream_conf(spark, location):
+            assert spark.conf.get(MANAGER_CONF, None) == want, location
+        assert spark.conf.get(MANAGER_CONF, None) is None
+
+
+def test_local_checkpoint_commits_through_the_filesystem_manager(
+    spark, stream_src, tmp_path
+):
+    """A serving drain to a local checkpoint runs every batch under the
+    FileSystem checkpoint manager, the session conf is unset again after
+    ``start()``, and every checksum file is still written: Spark's
+    ``N.changelog.crc`` beside each state changelog, and Hadoop's
+    ``.crc`` side files beside the changelogs and the offset and commit
+    logs."""
+    import glob
+
+    managers: list = []
+    ckpt = str(tmp_path / "ckpt")
+    sinks.run_foreach_batch(
+        twins.twin_tumbling(twins.events_stream(spark, stream_src)),
+        _recording(
+            lambda df, _: df.write.format("noop").mode("overwrite").save(),
+            managers,
+        ),
+        ckpt,
+    )
+    assert managers and set(managers) == {FS_MANAGER}
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    changelogs = glob.glob(f"{ckpt}/state/*/*/*.changelog")
+    assert changelogs
+    for path in changelogs:
+        head, name = os.path.split(path)
+        assert os.path.exists(f"{path}.crc"), path
+        assert os.path.exists(f"{head}/.{name}.crc"), path
+    for log in ("offsets", "commits"):
+        assert os.path.exists(f"{ckpt}/{log}/.0.crc"), log
 
 
 @pytest.fixture(scope="module")
